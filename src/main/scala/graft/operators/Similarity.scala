@@ -911,8 +911,8 @@ object Similarity {
       // A checkpointed LogicalRDD reports defaultSizeInBytes
       // (Long.MaxValue) — not an estimate at all. Trusting it here
       // silently forced the shuffle form for every checkpointed
-      // caller (the d=256 spec fixtures and ProfileMain's crossover
-      // runs), so the published "exact" wall times measured the
+      // caller (the d=256 spec fixtures and the r15 crossover runs
+      // in BENCHNOTES), so the published "exact" wall times measured the
       // ~4x-slower sort-merge shape. When stats are dead, size from
       // counted rows × schema row width like cellTopKNeighbors.
       if (est < BigInt(Long.MaxValue) / 4) est <= BigInt(MaxBroadcastBlockBytes)
@@ -1047,7 +1047,7 @@ object Similarity {
     * drop-in for the [[cellTopKNeighbors]] build side when the
     * assignment pass — not the candidate join — becomes the
     * bottleneck (~sf30+), in the regime where the geometry supports
-    * it; `ProfileMain hier` measures the phase wall at any sf.
+    * it; BENCHNOTES records the phase walls measured per sf.
     */
   def ivfProbeAssignmentsHier(emb: DataFrame, centroidIds: Seq[Long],
       nprobe: Int, coarseProbe: Int = 4,

@@ -90,7 +90,7 @@ object SourceQueries {
     },
 
     // ---- c6: time travel + compaction over the versioned table ----
-    // The Delta/Iceberg-class read surface (sources/VersionedTable):
+    // The Delta/Iceberg-class read surface (sources/ManifestTable):
     // the fixture commits v1 (partial aggregate), v2 (merged upsert),
     // v3 (compaction of v2 — data-identical, fewer files), and the
     // query diffs LATEST against readVersion(1): per changed user, the
@@ -117,7 +117,7 @@ object SourceQueries {
         |WHERE d.nd IS NOT NULL
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       val latest = Warehouse.userSummaryVersioned(s, dir)
-      val v1 = graft.sources.VersionedTable.readVersion(
+      val v1 = graft.sources.ManifestTable.readVersion(
           s, Warehouse.userSummaryVersionedPath(dir), 1L)
         .select(col("user_id").as("p_uid"), col("n_events").as("n_before"),
           col("total_cents").as("c_before"))
@@ -133,7 +133,7 @@ object SourceQueries {
     },
 
     // ---- c7: row-level change data feed between versions ----
-    // The CDC read on the versioned table (VersionedTable.changeFeed):
+    // The CDC read on the versioned table (ManifestTable.changeFeed):
     // v1 → latest as typed change rows — `insert` for keys born after
     // v1, `update_preimage`/`update_postimage` pairs for keys whose
     // summary changed, nothing for untouched keys (delta-sized
@@ -171,9 +171,9 @@ object SourceQueries {
         |ORDER BY user_id, change_type""".stripMargin) { (s, dir) =>
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
       val path = Warehouse.userSummaryVersionedPath(dir)
-      graft.sources.VersionedTable
+      graft.sources.ManifestTable
         .changeFeed(s, path, 1L,
-          graft.sources.VersionedTable.latestVersion(s, path),
+          graft.sources.ManifestTable.latestVersion(s, path),
           Seq("user_id"))
         .withColumnRenamed("_change_type", "change_type")
         .orderBy("user_id", "change_type")
@@ -183,7 +183,7 @@ object SourceQueries {
     // The capstone of the versioned-table surface: a bucket-level
     // rollup of user_summary maintained INCREMENTALLY — aggregate v1,
     // apply the v1→latest change feed through the signed-delta algebra
-    // (VersionedTable.incrementalAgg), never re-reading the base — and
+    // (ManifestTable.incrementalAgg), never re-reading the base — and
     // the result rows ARE the maintained values, flagged in-query
     // against a direct re-aggregation of the latest snapshot. The
     // oracle recomputes the rollup independently from raw events, so a
@@ -208,24 +208,24 @@ object SourceQueries {
         |FROM v2
         |GROUP BY user_id % 16
         |ORDER BY bucket""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
       val path = Warehouse.userSummaryVersionedPath(dir)
-      val latestV = VersionedTable.latestVersion(s, path)
+      val latestV = ManifestTable.latestVersion(s, path)
       def rollup(df: org.apache.spark.sql.DataFrame) = df
         .withColumn("bucket", pmod(col("user_id"), lit(16L)))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_users"),
           sum("n_events").as("sum_events"),
           sum("total_cents").as("sum_cents"))
-      val feed = VersionedTable.changeFeed(s, path, 1L, latestV,
+      val feed = ManifestTable.changeFeed(s, path, 1L, latestV,
         Seq("user_id"))
         .withColumn("bucket", pmod(col("user_id"), lit(16L)))
-      val maintained = VersionedTable.incrementalAgg(
-        rollup(VersionedTable.readVersion(s, path, 1L)), feed,
+      val maintained = ManifestTable.incrementalAgg(
+        rollup(ManifestTable.readVersion(s, path, 1L)), feed,
         Seq("bucket"), "n_users",
         Seq("n_events" -> "sum_events", "total_cents" -> "sum_cents"))
-      val direct = rollup(VersionedTable.readVersion(s, path, latestV))
+      val direct = rollup(ManifestTable.readVersion(s, path, latestV))
         .select(col("bucket"), col("n_users").as("d_nu"),
           col("sum_events").as("d_se"), col("sum_cents").as("d_sc"))
       maintained.join(direct, Seq("bucket"), "full_outer")
@@ -247,7 +247,7 @@ object SourceQueries {
     // so a manifest that drops a file it shouldn't — or misses rows at
     // the inclusive band edges — breaks the hash. The layout-vs-
     // correctness split (prune only SKIPS when clustered, is correct
-    // always) is spec-proven in VersionedTableSpec.
+    // always) is spec-proven in ManifestTableSpec.
     QueryDef("c9_stats_prune",
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
@@ -256,9 +256,9 @@ object SourceQueries {
         |WHERE user_id BETWEEN 3 AND 7
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryClustered(s, dir) // commit v1 + stats
-      VersionedTable.readVersionPruned(s,
+      ManifestTable.readVersionPruned(s,
         Warehouse.userSummaryClusteredPath(dir), 1L, "user_id", 3L, 7L)
         .select(col("user_id"), col("n_events"), col("total_cents"))
         .orderBy("user_id")
@@ -272,7 +272,7 @@ object SourceQueries {
     // prunes before scheduling the scan. A single-key clustering would
     // satisfy one band's manifest with tight ranges and the other with
     // full-domain files (no second-dimension skip); the Morton layout
-    // skips on both (file-count assertions in VersionedTableSpec). The
+    // skips on both (file-count assertions in ManifestTableSpec). The
     // oracle replays the box from raw events.
     QueryDef("c10_zorder_prune",
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -282,9 +282,9 @@ object SourceQueries {
         |WHERE user_id BETWEEN 3 AND 7 AND cents BETWEEN 2000 AND 4000
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.eventsZClustered(s, dir) // commit v1 + 2-col stats
-      VersionedTable.readVersionPrunedMulti(s,
+      ManifestTable.readVersionPrunedMulti(s,
         Warehouse.eventsZClusteredPath(dir), 1L,
         Seq(("user_id", 3L, 7L), ("cents", 2000L, 4000L)))
         .groupBy("user_id")
@@ -327,16 +327,16 @@ object SourceQueries {
     // pruning happens BEFORE task scheduling (driver-side manifest
     // probes); the residual IN filter on the surviving files stays
     // exact, so bloom false positives cost bytes, never correctness.
-    // VersionedTableSpec quantifies the contrast (min/max keeps 8/8,
+    // ManifestTableSpec quantifies the contrast (min/max keeps 8/8,
     // bloom keeps ≤ probed-id count); the oracle replays the lookup
     // from the raw table.
     QueryDef("c12_bloom_point_lookup",
       """SELECT doc_id, lang, source, n_chars
         |FROM documents WHERE doc_id IN (7, 123, 321)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsHashed(s, dir) // commit v1 + stats + blooms
-      VersionedTable.readVersionPrunedBloom(s,
+      ManifestTable.readVersionPrunedBloom(s,
         Warehouse.documentsHashedPath(dir), 1L, "doc_id",
         Seq(7L, 123L, 321L))
         .select("doc_id", "lang", "source", "n_chars")
@@ -351,7 +351,7 @@ object SourceQueries {
     // containment filter on the survivors. False positives cost bytes;
     // false negatives are impossible, so results are exact — which is
     // why the oracle is the plain containment predicate. The skip
-    // itself is quantified in VersionedTableSpec on a fixture whose
+    // itself is quantified in ManifestTableSpec on a fixture whose
     // files have disjoint marker vocabularies (this corpus's 31-token
     // synthetic vocabulary appears in every file by construction).
     QueryDef("c13_token_search",
@@ -361,9 +361,9 @@ object SourceQueries {
         |WHERE list_contains(regexp_extract_all(lower(text), '[a-z0-9]+'), 'dup')
         |  AND list_contains(regexp_extract_all(lower(text), '[a-z0-9]+'), 'vector')
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsText(s, dir) // commit v1 + token blooms
-      VersionedTable.readVersionSearch(s,
+      ManifestTable.readVersionSearch(s,
         Warehouse.documentsTextPath(dir), 1L, "text", Seq("dup", "vector"))
         .select(col("doc_id"), col("source"),
           expr("CAST(size(regexp_extract_all(text, '[A-Za-z0-9]+', 0)) AS BIGINT)")
@@ -381,9 +381,9 @@ object SourceQueries {
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  MIN(doc_id) AS min_v, MAX(doc_id) AS max_v
         |FROM documents""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsHashed(s, dir) // commit v1 + stats + blooms
-      VersionedTable.statsAgg(s,
+      ManifestTable.statsAgg(s,
         Warehouse.documentsHashedPath(dir), 1L, "doc_id")
     },
 
@@ -473,7 +473,7 @@ object SourceQueries {
     // diff. The table was committed as THREE appends; the tail since
     // v1 must be EXACTLY the rows of appends 2 and 3, scheduled from
     // the file-list difference with zero data compared (the
-    // VersionedTable change feed diff-joins two snapshots — O(table);
+    // changeFeed diff-joins two full versions — O(table);
     // here the delta falls out of the metadata). The oracle is the
     // honest filter over the raw table: a v1 row leaking into the
     // tail, a dropped append-2 row, or a file double-referenced
@@ -727,10 +727,10 @@ object SourceQueries {
         |  CAST(SUM(bal_cents) AS BIGINT) AS sum_bal_cents,
         |  TRUE AS match_direct
         |FROM j GROUP BY c_mktsegment ORDER BY segment""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
       val path = Warehouse.userSummaryVersionedPath(dir)
-      val latestV = VersionedTable.latestVersion(s, path)
+      val latestV = ManifestTable.latestVersion(s, path)
       val dim = Tables.customer(s, dir).select(
         col("c_custkey"), col("c_mktsegment"),
         expr("CAST(floor(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
@@ -738,12 +738,12 @@ object SourceQueries {
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("user_id"), col("n_events"), col("total_cents"),
           col("c_mktsegment"), col("bal_cents"))
-      val feed = VersionedTable.changeFeed(s, path, 1L, latestV,
+      val feed = ManifestTable.changeFeed(s, path, 1L, latestV,
         Seq("user_id"))
-      val maintained = VersionedTable.incrementalView(
-        enrich(VersionedTable.readVersion(s, path, 1L)), feed,
+      val maintained = ManifestTable.incrementalView(
+        enrich(ManifestTable.readVersion(s, path, 1L)), feed,
         Seq("user_id"), enrich)
-      val direct = enrich(VersionedTable.readVersion(s, path, latestV))
+      val direct = enrich(ManifestTable.readVersion(s, path, latestV))
         .select(col("user_id"), col("n_events").as("d_ne"),
           col("total_cents").as("d_tc"), col("c_mktsegment").as("d_seg"),
           col("bal_cents").as("d_bc"))

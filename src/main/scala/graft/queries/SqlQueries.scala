@@ -62,6 +62,9 @@ object SqlQueries {
     */
   private val duckDimSql = sparkDimSql.replace(" AS STRING)", " AS VARCHAR)")
 
+  /** h5's anchor size contract: ROOT + 5 regions + 25 nations. */
+  val H5AnchorLimit = 31
+
   /** The non-recursive prefix of [[sparkDimSql]] (seed union + root/
     * leaf flags), split out so h5 can materialize it ONCE before the
     * native recursion (see the h5 comment; semantics unchanged —
@@ -134,7 +137,11 @@ object SqlQueries {
       // no exchange. The walk stays NATIVE WITH RECURSIVE; the oracle
       // stays the single self-contained recursive statement.
       val anchor = s.sql(sparkNodesTempSql)
-      val rows = anchor.collect() // ≤ |regions|+|nations|+1 rows
+      val rows = anchor.take(H5AnchorLimit + 1)
+      require(rows.length <= H5AnchorLimit,
+        s"h5: the recursion anchor has more than $H5AnchorLimit rows; it is " +
+          "collected to the driver under the fixed-dims contract (ROOT + " +
+          "regions + nations), so a larger hierarchy must not take this path")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), anchor.schema)
         .createOrReplaceTempView("nodes_temp_m")
       s.sql(sparkWalkSql)

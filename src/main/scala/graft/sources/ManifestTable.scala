@@ -1,41 +1,44 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Manifest-versioned table with SHARED data files — the half of the
-  * table-format story [[VersionedTable]]'s full-snapshot layout
-  * deliberately defers ("fact-scale tables version DELTAS plus
-  * periodic compaction"; its class doc promises the API is
-  * manifest-shaped so a real manifest can replace directory listing —
-  * this is that manifest).
+/** Versioned Parquet table with SHARED data files — the Delta/Iceberg
+  * commit model on a plain filesystem: time travel, audit, compaction,
+  * data skipping and change capture over one layout.
   *
   * A version is a FILE LIST, not a directory: data files live once in
   * a shared `_pool/` and are immutable; version k's manifest
   * (`_manifest_v<k>.json`, atomically renamed into place) names the
-  * pool files it comprises. [[commitAppend]] therefore costs
-  * O(delta) — it writes only the new rows' files and a manifest that
-  * is parent's list + the new names — where a snapshot commit costs
-  * O(table). At 100 TB that is the difference between an append being
-  * a few file writes and a full-table copy; it is how Iceberg/Delta
-  * commits actually work.
+  * pool files it comprises. Two commit shapes share that one path:
+  * [[commitAppend]] costs O(delta) — it writes only the new rows'
+  * files and a manifest that is parent's list + the new names — and
+  * [[commit]] publishes a full snapshot, a manifest listing only the
+  * new files (right for key-bounded dims such as the streaming upsert
+  * target, which rewrite every row they keep). At 100 TB the append
+  * is the difference between a few file writes and a full-table copy;
+  * it is how Iceberg/Delta commits actually work.
   *
   * The second consequence is that per-FILE metadata outlives
-  * versions: files are immutable, so stats computed for a file once
-  * are valid in every version that references it. [[extendStats]]
-  * sketches ONLY files that have no stats row yet; a version's stats
-  * view is the per-file side table filtered to its manifest — the
-  * incremental-metadata property that makes data skipping affordable
-  * on a table that commits every few minutes.
+  * versions: files are immutable, so metadata computed for a file once
+  * is valid in every version that references it. Min/max stats, key
+  * blooms and token blooms are per-file side tables (`_filestats`,
+  * `_filebloom`, `_filetokens`); `extend*` sketches ONLY the files that
+  * have no row yet, a version's view is the side table filtered to its
+  * manifest, and [[vacuum]] drops the rows of the files it deletes —
+  * the incremental-metadata property that makes data skipping
+  * affordable on a table that commits every few minutes.
   *
   * Crash story: a commit is (1) parts moved into `_pool/` under
   * names unique to this version, (2) manifest written to a temp name,
   * (3) one atomic rename. A crash before (3) leaves orphaned pool
   * files invisible to every reader (no manifest names them);
   * [[vacuum]] reclaims them as unreferenced. Concurrent writers race
-  * on the rename: the loser's rename fails (target exists) and it
-  * retries at the next version — CAS semantics, spec-proven.
+  * on the rename: the loser's rename fails (target exists) and an
+  * append retries at the next version — CAS semantics, spec-proven;
+  * a commit derived from the version it replaces (snapshot, rewrite)
+  * refuses loudly instead of overwriting the winner.
   */
 object ManifestTable {
 
@@ -247,31 +250,63 @@ object ManifestTable {
     nv
   }
 
+  /** The one write path behind every commit of new rows: write `df`
+    * into the pool and publish it as the next version — on top of the
+    * parent's file list (`append`) or alone (a full snapshot). An
+    * append arrives in the parent's LOGICAL schema and is stored under
+    * the physical names, so the pool stays uniform across renames; a
+    * snapshot starts a fresh schema with no renames. An append retries
+    * past concurrent winners; a snapshot is derived from the version
+    * it replaces, so losing the race refuses. With a `txn`, each lap
+    * first re-checks whether a concurrent retry of the same txn landed.
+    */
+  private def commitRows(df: DataFrame, path: String, append: Boolean,
+      txn: Option[Long]): Long = {
+    val spark = df.sparkSession
+    def renamesBelow(v: Long) =
+      if (append && v > 1) renamesOf(spark, path, v - 1)
+      else Map.empty[String, String]
+    var v = committedVersions(spark, path).sorted.lastOption.getOrElse(0L) + 1
+    var renames = renamesBelow(v)
+    val names = writeParts(toPhysical(df, renames), path, v)
+    var done: Option[Long] = None
+    while (done.isEmpty) {
+      done = txn.flatMap(versionOfTxn(spark, path, _))
+      if (done.isEmpty) {
+        val parent =
+          if (append && v > 1) files(spark, path, v - 1) else Seq.empty
+        if (publish(spark, path, v, parent ++ names, txn, renames))
+          done = Some(v)
+        else {
+          require(append,
+            s"ManifestTable.commit: version $v raced a concurrent commit")
+          v += 1 // our pool files are version-named, but names only
+          // need uniqueness, not version agreement
+          renames = renamesBelow(v)
+        }
+      }
+    }
+    done.get
+  }
+
   /** Append `df` as a new version: O(delta) — only the new rows are
     * written; every parent file is REFERENCED, never copied. The first
     * call creates v1. Returns the committed version number (retrying
-    * past concurrent winners). `df` arrives in the CURRENT logical
-    * schema; rows are stored under the physical names so the pool
-    * stays uniform across renames.
+    * past concurrent winners).
     */
-  def commitAppend(df: DataFrame, path: String): Long = {
-    val spark = df.sparkSession
-    var v = committedVersions(spark, path).sorted.lastOption.getOrElse(0L) + 1
-    var renames =
-      if (v == 1) Map.empty[String, String]
-      else renamesOf(spark, path, v - 1)
-    val names = writeParts(toPhysical(df, renames), path, v)
-    while (!publish(spark, path, v,
-        (if (v == 1) Seq.empty
-         else files(spark, path, v - 1)) ++ names,
-        None, renames)) {
-      v += 1 // a concurrent writer took this version; re-point at the
-      // new parent's list (our pool files are version-named but names
-      // only need uniqueness, not version agreement)
-      renames = renamesOf(spark, path, v - 1)
-    }
-    v
-  }
+  def commitAppend(df: DataFrame, path: String): Long =
+    commitRows(df, path, append = true, None)
+
+  /** Publish `df` as a full snapshot: a new version whose manifest
+    * lists only `df`'s new pool files — the commit shape of a
+    * key-bounded dim rebuilt from its previous version (merge, upsert).
+    * Earlier versions keep reading their own files until vacuumed.
+    * With a `txnId`, a retry of an already-published txn returns that
+    * version and writes nothing (the [[commitAppendOnce]] dedup).
+    */
+  def commit(df: DataFrame, path: String, txnId: Option[Long] = None): Long =
+    txnId.flatMap(versionOfTxn(df.sparkSession, path, _))
+      .getOrElse(commitRows(df, path, append = false, txnId))
 
   /** CHECK-constrained append (Delta's table CHECK constraints as an
     * ingestion gate): commits `df` only if every row satisfies
@@ -302,36 +337,9 @@ object ManifestTable {
     * version-count-sized) and no-ops to the original version; its
     * half-written pool files are vacuum-able orphans.
     */
-  def commitAppendOnce(df: DataFrame, path: String, txnId: Long): Long = {
-    val spark = df.sparkSession
-    versionOfTxn(spark, path, txnId) match {
-      case Some(v) => v
-      case None =>
-        var v = committedVersions(spark, path).sorted.lastOption
-          .getOrElse(0L) + 1
-        var renames =
-          if (v == 1) Map.empty[String, String]
-          else renamesOf(spark, path, v - 1)
-        val names = writeParts(toPhysical(df, renames), path, v)
-        var done = false
-        while (!done) {
-          // a concurrent commit (or a concurrent retry of THIS txn)
-          // may land while we prepare — re-check the txn each lap
-          versionOfTxn(spark, path, txnId) match {
-            case Some(w) => return w
-            case None =>
-              done = publish(spark, path, v,
-                (if (v == 1) Seq.empty else files(spark, path, v - 1)) ++
-                  names, Some(txnId), renames)
-              if (!done) {
-                v += 1
-                renames = renamesOf(spark, path, v - 1)
-              }
-          }
-        }
-        v
-    }
-  }
+  def commitAppendOnce(df: DataFrame, path: String, txnId: Long): Long =
+    versionOfTxn(df.sparkSession, path, txnId)
+      .getOrElse(commitRows(df, path, append = true, Some(txnId)))
 
   /** The committed version carrying `txnId`, if any. */
   def versionOfTxn(spark: SparkSession, path: String,
@@ -341,6 +349,7 @@ object ManifestTable {
 
   /** Read version `v`: schedule exactly its manifest's pool files,
     * aliased to `v`'s LOGICAL column names (see [[renameColumn]]).
+    * Fails loudly on an uncommitted or vacuumed version.
     */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame =
     toLogical(readVersionPhysical(spark, path, v),
@@ -355,6 +364,18 @@ object ManifestTable {
 
   def latest(spark: SparkSession, path: String): DataFrame =
     readVersion(spark, path, latestVersion(spark, path))
+
+  /** Pool files `kept` of version `v` under `v`'s logical names — the
+    * scan schedule of every skipping read. An empty schedule reads
+    * nothing, with the version's schema intact.
+    */
+  private def readFiles(spark: SparkSession, path: String, v: Long,
+      kept: Seq[String]): DataFrame =
+    if (kept.isEmpty) readVersion(spark, path, v).where(lit(false))
+    else toLogical(
+      spark.read.schema(readVersionPhysical(spark, path, v).schema)
+        .parquet(kept.sorted.map(n => s"$path/_pool/$n"): _*),
+      renamesOf(spark, path, v))
 
   /** Timestamp time travel (Delta's `TIMESTAMP AS OF`): the newest
     * version whose manifest was committed at or before `tsMillis` —
@@ -405,7 +426,7 @@ object ManifestTable {
   /** One row per version: file count, bytes, and how many files are
     * SHARED with the previous version — the audit trail that makes the
     * O(delta) claim checkable (an append's sharing is its parent's
-    * whole list).
+    * whole list, a snapshot's is zero).
     */
   def history(spark: SparkSession, path: String): DataFrame = {
     val fs = fsFor(spark, path)
@@ -426,8 +447,8 @@ object ManifestTable {
   /** Compaction: rewrite the LATEST version's rows into `targetFiles`
     * fresh pool files and publish them as a new version that shares
     * NOTHING — older versions still read their original files until
-    * vacuumed. Stats for the new files extend incrementally like any
-    * other commit.
+    * vacuumed. Metadata for the new files extends incrementally like
+    * any other commit.
     */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1): Long = {
     val v = latestVersion(spark, path)
@@ -469,57 +490,13 @@ object ManifestTable {
     nv
   }
 
-  /** Multi-dimensional data skipping: keep only files overlapping
-    * EVERY band — per-column prunes intersect, which is where the
-    * z-ordered layout pays ([[compactZorder]]). Exact residual filter
-    * on all bands; stats required for every file on every band
-    * column, as ever.
-    */
-  /** The files of version `v` whose per-column stats bands intersect
-    * EVERY probe band — the scan schedule [[readVersionPrunedMulti]]
-    * reads. Public so specs can audit layout effects (z-order, the
-    * c25 partition evolution) at the file level.
-    */
-  def prunedFilesMulti(spark: SparkSession, path: String, v: Long,
-      bands: Seq[(String, Long, Long)]): Seq[String] = {
-    require(bands.nonEmpty, "prunedFilesMulti: no bands given")
-    val renames = renamesOf(spark, path, v)
-    val names = files(spark, path, v)
-    val keptPerBand = bands.map { case (c, lo, hi) =>
-      val phys = physicalFor(renames, c)
-      val stats = statsFor(spark, path, v).where(col("column") === phys)
-        .select("file", "min_v", "max_v").collect()
-      val statFiles = stats.map(_.getString(0)).toSet
-      require(names.forall(statFiles.contains),
-        s"prunedFilesMulti: files of v$v lack stats for $c: " +
-          names.filterNot(statFiles.contains).mkString(", "))
-      stats.filter(r => !r.isNullAt(1) && r.getLong(2) >= lo
-        && r.getLong(1) <= hi).map(_.getString(0)).toSet
-    }
-    keptPerBand.reduce(_ intersect _).toSeq.sorted
-  }
-
-  def readVersionPrunedMulti(spark: SparkSession, path: String, v: Long,
-      bands: Seq[(String, Long, Long)]): DataFrame = {
-    val renames = renamesOf(spark, path, v)
-    val kept = prunedFilesMulti(spark, path, v, bands)
-    val residual = bands.map { case (c, lo, hi) =>
-      col(physicalFor(renames, c)) >= lo &&
-        col(physicalFor(renames, c)) <= hi
-    }.reduce(_ && _)
-    if (kept.isEmpty) readVersion(spark, path, v).where(lit(false))
-    else toLogical(
-      spark.read.schema(readVersionPhysical(spark, path, v).schema)
-        .parquet(kept.map(n => s"$path/_pool/$n"): _*)
-        .where(residual),
-      renames)
-  }
-
   /** Retention with REFCOUNTING: drop every version except the newest
     * `keep`, then delete pool files no SURVIVING manifest references —
-    * shared files live exactly as long as a reader can reach them.
-    * Orphans from crashed/lost commits are reclaimed here too.
-    * Returns (versions dropped, pool files deleted).
+    * shared files live exactly as long as a reader can reach them —
+    * together with their rows in every per-file side table. Orphans
+    * from crashed/lost commits are reclaimed here too. Reading a
+    * vacuumed version fails loudly. Returns (versions dropped, pool
+    * files deleted).
     */
   def vacuum(spark: SparkSession, path: String,
       keep: Int = 2): (Seq[Long], Seq[String]) = {
@@ -535,16 +512,16 @@ object ManifestTable {
       else fs.listStatus(pool).toSeq.map(_.getPath.getName)
         .filterNot(live.contains).sorted
     dead.foreach(n => fs.delete(new Path(pool, n), false))
-    // per-file stats rows for deleted files are dropped with them
-    if (fs.exists(new Path(s"$path/_filestats")) && dead.nonEmpty) {
-      val kept = readFileStats(spark, path)
-        .where(!col("file").isin(dead: _*))
-      val tmp = s"$path/_filestats_new"
-      kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-      fs.delete(new Path(s"$path/_filestats"), true)
-      require(fs.rename(new Path(tmp), new Path(s"$path/_filestats")),
-        "vacuum: stats rewrite rename failed")
-    }
+    if (dead.nonEmpty) sideTables.map(new Path(path, _)).filter(fs.exists)
+      .foreach { table =>
+        val tmp = new Path(path, s"${table.getName}_new")
+        spark.read.parquet(table.toString)
+          .where(!col("file").isin(dead: _*))
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        fs.delete(table, true)
+        require(fs.rename(tmp, table),
+          s"vacuum: ${table.getName} rewrite rename failed")
+      }
     (drop, dead)
   }
 
@@ -566,22 +543,13 @@ object ManifestTable {
       lo: Long, hi: Long): Long = {
     val v = latestVersion(spark, path)
     val renames = renamesOf(spark, path, v)
-    val phys = physicalFor(renames, colName) // stats are keyed physical
-    val names = files(spark, path, v)
-    val stats = statsFor(spark, path, v).where(col("column") === phys)
-      .select("file", "min_v", "max_v").collect()
-    val statFiles = stats.map(_.getString(0)).toSet
-    require(names.forall(statFiles.contains),
-      s"deleteWhere: files of v$v lack stats for $colName: " +
-        names.filterNot(statFiles.contains).mkString(", "))
-    val touched = stats
-      .filter(r => !r.isNullAt(1) && r.getLong(2) >= lo && r.getLong(1) <= hi)
-      .map(_.getString(0)).toSet
+    val phys = physicalFor(renames, colName)
+    val touched = prunedFilesMulti(spark, path, v, Seq((colName, lo, hi)))
     if (touched.isEmpty) return v // provable no-op
-    val untouched = names.filterNot(touched.contains)
+    val untouched = files(spark, path, v).filterNot(touched.toSet)
     val nv = v + 1
     val survivors = spark.read
-      .parquet(touched.toSeq.sorted.map(n => s"$path/_pool/$n"): _*)
+      .parquet(touched.map(n => s"$path/_pool/$n"): _*)
       .where(!(col(phys) >= lo && col(phys) <= hi))
       .coalesce(touched.size)
     val newNames = writeParts(survivors, path, nv)
@@ -594,14 +562,13 @@ object ManifestTable {
     * on the READ side: the rows added after `fromV` (exclusive) up to
     * `toV` (inclusive) are exactly the rows of the files the two
     * manifests DIFFER by, so change capture costs O(delta-files) with
-    * ZERO data compared ([[VersionedTable.changeFeed]] diff-joins two
-    * full snapshots — O(table); here the delta falls out of the
-    * metadata). This is how a downstream consumer tails a 100 TB
-    * table that commits every minute: each poll schedules only the
-    * new files.
+    * ZERO data compared ([[changeFeed]] diff-joins two full versions —
+    * O(table); here the delta falls out of the metadata). This is how
+    * a downstream consumer tails a 100 TB table that commits every
+    * minute: each poll schedules only the new files.
     *
     * Sound only for APPEND-ONLY histories: a version that REMOVED a
-    * file (delete, merge rewrite, compaction) breaks
+    * file (delete, merge rewrite, compaction, snapshot) breaks
     * rows-added-equals-file-diff — a rewritten file's surviving rows
     * would re-appear as "new". Every step in (fromV, toV] is checked
     * (not just the endpoints: a mid-range rewrite can slip past an
@@ -667,12 +634,8 @@ object ManifestTable {
     val renames = renamesOf(spark, path, v)
     val physKey = physicalFor(renames, keyCol) // pool + stats: physical
     val names = files(spark, path, v)
-    val stats = statsFor(spark, path, v).where(col("column") === physKey)
-      .select("file", "min_v", "max_v").collect()
-    val statFiles = stats.map(_.getString(0)).toSet
-    require(names.forall(statFiles.contains),
-      s"mergeInto: files of v$v lack stats for $keyCol: " +
-        names.filterNot(statFiles.contains).mkString(", "))
+    val stats = sideRows(spark, path, "_filestats", v, keyCol,
+      "min_v", "max_v")
     val src = toPhysical(source, renames).cache()
     try {
       val dup = src.groupBy(physKey).count().where(col("count") > 1).count()
@@ -749,57 +712,165 @@ object ManifestTable {
     } finally src.unpersist()
   }
 
-  /** Incrementally extend the per-FILE stats side table for `statsCols`
-    * (long-typed): files are immutable, so stats are computed ONCE per
-    * file and reused by every version that references it — only files
-    * of `version` that carry no stats row yet are scanned. The 100 TB
-    * consequence: a minutely append commits metadata for its delta
-    * only, never re-reads the table.
+  // ---- per-file side tables. Each holds one row per (file, column):
+  // `_filestats` (n_rows, min_v, max_v — long-typed columns),
+  // `_filebloom` (a key bloom) and `_filetokens` (a token bloom), keyed
+  // by PHYSICAL column name because they describe immutable files.
+  // Every file sketched gets a row, even one with no qualifying value
+  // (NULL band / NULL blob, which never admits a probe), so a missing
+  // row always means "never sketched" and the readers refuse it.
+  private val sideTables = Seq("_filestats", "_filebloom", "_filetokens")
+
+  /** Append to side table `table` the rows version `v` lacks: for each
+    * of `cols` (logical names), `sketch(files, physicalColumn)` runs
+    * over just the files without a row for that column.
+    */
+  private def extendSide(spark: SparkSession, path: String, table: String,
+      v: Long, cols: Seq[String])(
+      sketch: (Seq[String], String) => DataFrame): Unit = {
+    val renames = renamesOf(spark, path, v)
+    val have: Set[(String, String)] =
+      if (!fsFor(spark, path).exists(new Path(path, table))) Set.empty
+      else spark.read.parquet(s"$path/$table").select("file", "column")
+        .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val names = files(spark, path, v)
+    val parts = cols.map(physicalFor(renames, _)).distinct.flatMap { c =>
+      val need = names.filterNot(n => have((n, c)))
+      if (need.isEmpty) None else Some(sketch(need, c))
+    }
+    if (parts.nonEmpty)
+      parts.reduce(_ unionByName _).coalesce(1)
+        .write.mode("append").parquet(s"$path/$table")
+  }
+
+  /** One row per file of `need`: `agg` (keyed by `_file`, the pool
+    * name of each row's file) left-joined onto the file list, so a
+    * file contributing no group keeps NULL aggregates.
+    */
+  private def perFile(spark: SparkSession, need: Seq[String],
+      agg: DataFrame): DataFrame = {
+    import spark.implicits._
+    need.toDF("_file").join(agg, Seq("_file"), "left")
+  }
+
+  /** The pool files `need`, each row tagged with its file's pool name. */
+  private def poolScan(spark: SparkSession, path: String,
+      need: Seq[String]): DataFrame =
+    spark.read.parquet(need.map(n => s"$path/_pool/$n"): _*)
+      .withColumn("_file",
+        element_at(split(col("_metadata.file_path"), "/"), -1))
+
+  /** Rows of side table `table` for version `v`'s files on logical
+    * column `colName`: `file` followed by `fields`. Fails loudly when a
+    * file of `v` has no row — a file without metadata cannot be safely
+    * skipped, and silently scanning it would hide the gap.
+    */
+  private def sideRows(spark: SparkSession, path: String, table: String,
+      v: Long, colName: String, fields: String*): Array[Row] = {
+    val names = files(spark, path, v)
+    val phys = physicalFor(renamesOf(spark, path, v), colName)
+    val rows =
+      if (!fsFor(spark, path).exists(new Path(path, table))) Array.empty[Row]
+      else spark.read.parquet(s"$path/$table")
+        .where(col("column") === phys && col("file").isin(names: _*))
+        .select("file", fields: _*).collect()
+    val have = rows.map(_.getString(0)).toSet
+    val missing = names.filterNot(have.contains)
+    require(missing.isEmpty, s"files of v$v of $path lack $table rows " +
+      s"for $colName: ${missing.mkString(", ")}")
+    rows
+  }
+
+  /** Incrementally extend the per-FILE min/max/count stats for
+    * `statsCols` (long-typed): files are immutable, so stats are
+    * computed ONCE per file and reused by every version that references
+    * it — only files of `version` without a row for the column are
+    * scanned. The 100 TB consequence: a minutely append commits
+    * metadata for its delta only, never re-reads the table. At scale
+    * the point of file stats is that pruned reads drop files BEFORE the
+    * scan is scheduled — parquet row-group pruning still pays a task +
+    * footer read per file, manifest pruning pays neither. A zero-row
+    * file gets n_rows = 0 and a NULL band, which never overlaps a probe.
     */
   def extendStats(spark: SparkSession, path: String, version: Long,
-      statsCols0: Seq[String]): Unit = {
-    val fs = fsFor(spark, path)
-    // stats rows are keyed by PHYSICAL column names (they describe
-    // immutable files); callers pass the current logical names
-    val renames = renamesOf(spark, path, version)
-    val statsCols = statsCols0.map(physicalFor(renames, _))
-    val have: Set[String] =
-      if (!fs.exists(new Path(s"$path/_filestats"))) Set.empty
-      else readFileStats(spark, path)
-        .select("file").distinct().collect().map(_.getString(0)).toSet
-    val need = files(spark, path, version).filterNot(have.contains)
-    if (need.isEmpty) return
-    val snap = spark.read
-      .parquet(need.map(n => s"$path/_pool/$n"): _*)
-      .select(element_at(split(col("_metadata.file_path"), "/"), -1)
-        .as("file") +: statsCols.map(col): _*)
-    val perCol = statsCols.map { c =>
-      snap.groupBy("file").agg(
-        count(lit(1)).as("n_rows"),
-        min(col(c)).cast("long").as("min_v"),
-        max(col(c)).cast("long").as("max_v"))
-        .select(col("file"), lit(c).as("column"), col("n_rows"),
+      statsCols: Seq[String]): Unit =
+    extendSide(spark, path, "_filestats", version, statsCols) { (need, c) =>
+      perFile(spark, need, poolScan(spark, path, need).groupBy("_file").agg(
+          count(lit(1)).as("n_rows"),
+          min(col(c)).cast("long").as("min_v"),
+          max(col(c)).cast("long").as("max_v")))
+        .select(col("_file").as("file"), lit(c).as("column"),
+          coalesce(col("n_rows"), lit(0L)).as("n_rows"),
           col("min_v"), col("max_v"))
     }
-    val fromData = perCol.reduce(_ unionByName _)
-    // a ZERO-ROW file (e.g. a delete that emptied it) produces no
-    // aggregate group — it still needs a stats row (n_rows=0, NULL
-    // band) or every stats consumer would refuse the file as
-    // metadata-less. NULL bands never overlap a probe, so empty files
-    // always prune.
-    val covered = fromData.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val emptyFiles = need.filterNot(covered.contains)
-    val all = if (emptyFiles.isEmpty) fromData else {
-      import spark.implicits._
-      val zeroRows = emptyFiles.flatMap(f => statsCols.map(c =>
-        (f, c, 0L, Option.empty[Long], Option.empty[Long])))
-        .toDF("file", "column", "n_rows", "min_v", "max_v")
-      fromData.unionByName(zeroRows)
+
+  /** Per-FILE BLOOM sketches for `bloomCols` (long-typed) — the
+    * LAYOUT-INDEPENDENT point-lookup complement to the min/max bands.
+    * Range stats only skip when the physical layout clusters the column
+    * (on a hash-distributed layout every file spans the full domain and
+    * min/max keeps everything); a bloom answers "can key K possibly be
+    * in this file" on ANY layout at `numBits` bits per file per column.
+    * Built in one columnar scan per column: `groupBy` file with the
+    * mergeable bloom aggregate (`functions/Bloom.scala`) — per-FILE
+    * filters, never a global one, so the side table stays
+    * file-count-sized and pruning happens BEFORE task scheduling.
+    * Extended like [[extendStats]]: only unsketched files are scanned.
+    *
+    * NULL keys are not admitted to the sketch; an IN probe can never
+    * match NULL, so a file holding only NULLs in the column gets a
+    * NULL blob and always prunes.
+    */
+  def extendBloom(spark: SparkSession, path: String, version: Long,
+      bloomCols: Seq[String], numBits: Int = 1 << 17, k: Int = 7): Unit = {
+    require(bloomCols.nonEmpty, "extendBloom: no columns given")
+    extendSide(spark, path, "_filebloom", version, bloomCols) { (need, c) =>
+      bloomRows(spark, need, c, numBits, k,
+        poolScan(spark, path, need).where(col(c).isNotNull)
+          .select(col("_file"), col(c).cast("long").as("_key")))
     }
-    all.coalesce(1)
-      .write.mode("append").parquet(s"$path/_filestats")
   }
+
+  /** One side-table row per file of `need`: the bloom of the `_key`
+    * values in `keys` (keyed by `_file`), NULL for a file with none.
+    */
+  private def bloomRows(spark: SparkSession, need: Seq[String], c: String,
+      numBits: Int, k: Int, keys: DataFrame): DataFrame =
+    perFile(spark, need, keys.groupBy("_file").agg(
+        graft.functions.Bloom.bloomAgg(col("_key"), numBits, k).as("blob")))
+      .select(col("_file").as("file"), lit(c).as("column"),
+        lit(numBits).as("num_bits"), lit(k).as("k"), col("blob"))
+
+  /** The canonical tokenizer shared by the token-bloom build, the
+    * residual search filter, and every oracle: lowercase alnum runs.
+    * Kept as ONE expression string so build and probe can never drift.
+    */
+  private def tokensExpr(textCol: String): String =
+    s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)"
+
+  /** Per-file TOKEN blooms for text column `textCol` — a full-text
+    * skip index: "which files can possibly contain the word W?"
+    * answered driver-side, before any task is scheduled. This is the
+    * capability behind "grep a 100 TB corpus for a rare term without
+    * scanning it": token blooms admit ~the files that truly contain the
+    * term (+FPR); everything else never leaves the side table.
+    *
+    * Built in ONE columnar scan of the text column: tokenize → per-row
+    * distinct token hashes → explode → `groupBy` file with the
+    * mergeable bloom aggregate (map-side partial bitsets, so the
+    * shuffle carries file-count × blob, never token rows). Sizing
+    * note: unlike key blooms, token blooms hold a file's DISTINCT
+    * VOCABULARY — size `numBits` for vocabulary cardinality (2^17 bits
+    * / k=7 holds ~10k distinct tokens at ~1% FPR), not row count.
+    */
+  def extendTokenBloom(spark: SparkSession, path: String, version: Long,
+      textCol: String, numBits: Int = 1 << 17, k: Int = 7): Unit =
+    extendSide(spark, path, "_filetokens", version, Seq(textCol)) { (need, c) =>
+      bloomRows(spark, need, c, numBits, k,
+        poolScan(spark, path, need).where(col(c).isNotNull)
+          .select(col("_file"), explode(expr(
+            s"array_distinct(transform(${tokensExpr(c)}, t -> xxhash64(t)))"))
+            .as("_key")))
+    }
 
   /** The per-file stats side table (all files ever sketched). */
   def readFileStats(spark: SparkSession, path: String): DataFrame =
@@ -813,74 +884,335 @@ object ManifestTable {
     readFileStats(spark, path).where(col("file").isin(names: _*))
   }
 
-  /** Band-pruned read of version `v` on `colName` ∈ [lo, hi] through
-    * the per-file stats — [[VersionedTable.readVersionPruned]]'s
-    * contract on the shared-file layout, with the residual filter
-    * exact as ever. Requires stats for every file of `v` (a file
-    * without stats cannot be safely skipped, and silently scanning it
-    * would hide a metadata gap — fail loudly instead).
+  /** The files of version `v` whose per-column stats bands intersect
+    * EVERY probe band — the scan schedule [[readVersionPrunedMulti]]
+    * reads. Public so specs can audit layout effects (z-order, the
+    * c25 partition evolution) at the file level.
     */
-  /** JOIN-TIME dynamic file pruning (Delta's DFP): schedule only the
-    * files whose [min,max] band on `colName` admits at least one of
-    * the dim side's join keys — the data-skipping story extended from
+  def prunedFilesMulti(spark: SparkSession, path: String, v: Long,
+      bands: Seq[(String, Long, Long)]): Seq[String] = {
+    require(bands.nonEmpty, "prunedFilesMulti: no bands given")
+    val keptPerBand = bands.map { case (c, lo, hi) =>
+      sideRows(spark, path, "_filestats", v, c, "min_v", "max_v")
+        .filter(r => !r.isNullAt(1) && r.getLong(2) >= lo && r.getLong(1) <= hi)
+        .map(_.getString(0)).toSet
+    }
+    keptPerBand.reduce(_ intersect _).toSeq.sorted
+  }
+
+  /** Band-pruned read of version `v` on `colName` ∈ [lo, hi] through
+    * the per-file stats, with the exact residual filter on top (file
+    * stats are a superset bound, not an index). Correct for ANY
+    * layout; it only SKIPS when the layout clusters `colName`.
+    */
+  def readVersionPruned(spark: SparkSession, path: String, v: Long,
+      colName: String, lo: Long, hi: Long): DataFrame =
+    readVersionPrunedMulti(spark, path, v, Seq((colName, lo, hi)))
+
+  /** Multi-dimensional data skipping: keep only files overlapping
+    * EVERY band — per-column prunes intersect, which is where the
+    * z-ordered layout pays ([[compactZorder]]). Exact residual filter
+    * on all bands; stats required for every file on every band
+    * column, as ever.
+    */
+  def readVersionPrunedMulti(spark: SparkSession, path: String, v: Long,
+      bands: Seq[(String, Long, Long)]): DataFrame =
+    readFiles(spark, path, v, prunedFilesMulti(spark, path, v, bands))
+      .where(bands.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
+        .reduce(_ && _))
+
+  /** JOIN-TIME dynamic file pruning (Delta's DFP) and IN-list lookup:
+    * schedule only the files whose [min,max] band on `colName` admits
+    * at least one of `keys` — the data-skipping story extended from
     * single-table predicates (c9–c14) to the join boundary, where a
     * dim-filtered fact scan otherwise reads the whole fact table and
     * lets the join discard 99% of it. `keys` is collected
     * driver-side, the same dim-sized contract as a broadcast join's
     * build side (DFP only ever applies when the dim IS
     * broadcast-small); per-file admission is a sorted-array binary
-    * search, O(files · log keys). The exact join afterwards keeps
-    * correctness independent of pruning (a false admit costs bytes,
-    * a false drop is impossible: every key inside a file lies inside
-    * its band). Requires stats for every file — fail loudly, as ever.
+    * search, O(files · log keys). The caller's exact join or IN filter
+    * afterwards keeps correctness independent of pruning (a false
+    * admit costs bytes, a false drop is impossible: every key inside a
+    * file lies inside its band). Requires stats for every file.
     */
   def readVersionPrunedByKeys(spark: SparkSession, path: String, v: Long,
       colName: String, keys: Seq[Long]): DataFrame = {
-    val renames = renamesOf(spark, path, v)
-    val phys = physicalFor(renames, colName)
-    val names = files(spark, path, v)
-    val stats = statsFor(spark, path, v).where(col("column") === phys)
-      .select("file", "min_v", "max_v").collect()
-    val statFiles = stats.map(_.getString(0)).toSet
-    require(names.forall(statFiles.contains),
-      s"readVersionPrunedByKeys: files of v$v lack stats for $colName: " +
-        names.filterNot(statFiles.contains).mkString(", "))
     val sorted = keys.distinct.sorted.toArray
     def bandHasKey(lo: Long, hi: Long): Boolean = {
       val i = java.util.Arrays.binarySearch(sorted, lo)
       val at = if (i >= 0) i else -i - 1 // first key >= lo
       at < sorted.length && sorted(at) <= hi
     }
-    val kept = stats.toSeq
+    val kept = sideRows(spark, path, "_filestats", v, colName, "min_v", "max_v")
       .filter(r => !r.isNullAt(1) && bandHasKey(r.getLong(1), r.getLong(2)))
-      .map(_.getString(0)).sorted
-    val full = readVersionPhysical(spark, path, v)
-    if (kept.isEmpty) readVersion(spark, path, v).where(lit(false))
-    else toLogical(
-      spark.read.schema(full.schema)
-        .parquet(kept.map(n => s"$path/_pool/$n"): _*),
-      renames)
+      .map(_.getString(0)).toSeq
+    readFiles(spark, path, v, kept)
   }
 
-  def readVersionPruned(spark: SparkSession, path: String, v: Long,
-      colName: String, lo: Long, hi: Long): DataFrame = {
-    val renames = renamesOf(spark, path, v)
-    val phys = physicalFor(renames, colName) // stats are keyed physical
-    val names = files(spark, path, v)
-    val stats = statsFor(spark, path, v).where(col("column") === phys)
-    val statFiles = stats.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    require(names.forall(statFiles.contains),
-      s"readVersionPruned: files of v$v lack stats for $colName: " +
-        names.filterNot(statFiles.contains).mkString(", "))
-    val kept = stats.where(col("max_v") >= lo && col("min_v") <= hi)
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-    val full = readVersionPhysical(spark, path, v)
-    if (kept.isEmpty) readVersion(spark, path, v).where(lit(false))
-    else toLogical(
-      spark.read.schema(full.schema)
-        .parquet(kept.map(n => s"$path/_pool/$n"): _*)
-        .where(col(phys) >= lo && col(phys) <= hi),
-      renames)
+  /** Metadata-only aggregation (the Delta/Iceberg "answer from the
+    * manifest" path): COUNT(*) / MIN / MAX on a stats-carrying column
+    * computed purely from the per-file stats — sum of per-file row
+    * counts, min of per-file minima, max of per-file maxima. ZERO data
+    * files are read (spec-proven by deleting them first): at 100 TB
+    * this is the difference between a catalog ping and a full scan for
+    * the `SELECT count(*), min(k), max(k)` a dashboard fires hourly.
+    *
+    * Semantics match SQL aggregates exactly: `n_rows` counts ALL rows
+    * (the per-file count is unconditional); `min_v`/`max_v` ignore
+    * NULLs (an all-NULL file carries a NULL band, which min/max skip).
+    * Only sound because files are immutable — a mutable file would
+    * need metadata invalidation on write.
+    */
+  def statsAgg(spark: SparkSession, path: String, version: Long,
+      colName: String): DataFrame = {
+    val rows = sideRows(spark, path, "_filestats", version, colName,
+      "n_rows", "min_v", "max_v")
+    val banded = rows.filterNot(_.isNullAt(2))
+    import spark.implicits._
+    Seq((rows.map(_.getLong(1)).sum,
+        banded.map(_.getLong(2)).minOption, banded.map(_.getLong(3)).maxOption))
+      .toDF("n_rows", "min_v", "max_v")
+  }
+
+  /** The files of `v` whose bloom in side table `table` on `colName`
+    * passes `admits` (decoded bits, k), plus the version's file count.
+    * Driver-side: files × probes × k bits over file-count-sized blobs —
+    * control-plane work, like the scheduler's own file enumeration.
+    * False positives over-keep (the residual filter stays exact);
+    * false negatives are impossible, so a pruned file provably fails
+    * the probe.
+    */
+  private def bloomPrune(spark: SparkSession, path: String, table: String,
+      v: Long, colName: String)(
+      admits: (Array[Long], Int) => Boolean): (Seq[String], Long) = {
+    val rows = sideRows(spark, path, table, v, colName, "blob")
+    val kept = rows.filter { r =>
+      !r.isNullAt(1) && {
+        val (bits, k) = graft.functions.Bloom.decode(r.getAs[Array[Byte]](1))
+        admits(bits, k)
+      }
+    }.map(_.getString(0)).toSeq.sorted
+    (kept, rows.length.toLong)
+  }
+
+  /** The files of `v` that might contain ANY of `values` on `colName`
+    * per the key blooms, plus the version's total file count.
+    */
+  def prunedFilesBloom(spark: SparkSession, path: String, v: Long,
+      colName: String, values: Seq[Long]): (Seq[String], Long) = {
+    require(values.nonEmpty, "prunedFilesBloom: empty value list")
+    bloomPrune(spark, path, "_filebloom", v, colName) { (bits, k) =>
+      values.exists(graft.functions.Bloom.mightContain(bits, k, _))
+    }
+  }
+
+  /** IN-list point lookup through the key blooms: schedule only the
+    * files whose sketch admits at least one probe key, then apply the
+    * exact residual IN filter. The 100 TB shape this serves: "fetch
+    * these 50 document ids from a 10k-file table" on a layout that is
+    * NOT clustered by id — min/max keeps every file there, the bloom
+    * keeps ~the files that truly hold the keys (+FPR).
+    */
+  def readVersionPrunedBloom(spark: SparkSession, path: String,
+      v: Long, colName: String, values: Seq[Long]): DataFrame =
+    readFiles(spark, path, v,
+        prunedFilesBloom(spark, path, v, colName, values)._1)
+      .where(col(colName).isin(values: _*))
+
+  /** Hash search terms EXACTLY as the token build hashed tokens —
+    * through the engine's own xxhash64 on a 1-row control-plane plan,
+    * so a Spark-version hash change can never split build from probe.
+    */
+  private def termHashes(spark: SparkSession, terms: Seq[String]): Seq[Long] = {
+    require(terms.nonEmpty, "token search: empty term list")
+    terms.foreach(t => require(t.matches("[a-z0-9]+"),
+      s"search term must be a lowercase alnum token, got '$t'"))
+    val row = spark.range(1)
+      .select(terms.zipWithIndex.map { case (t, i) =>
+        xxhash64(lit(t)).as(s"h$i")
+      }: _*).head
+    terms.indices.map(row.getLong)
+  }
+
+  /** The files of `v` that might contain EVERY one of `terms` in
+    * `textCol` per the token blooms (AND search semantics at file
+    * granularity — a superset of the row-level answer, which the
+    * residual filter makes exact), plus the total file count.
+    */
+  def prunedFilesToken(spark: SparkSession, path: String, v: Long,
+      textCol: String, terms: Seq[String]): (Seq[String], Long) = {
+    val hashes = termHashes(spark, terms)
+    bloomPrune(spark, path, "_filetokens", v, textCol) { (bits, k) =>
+      hashes.forall(graft.functions.Bloom.mightContain(bits, k, _))
+    }
+  }
+
+  /** Keyword search through the token blooms: schedule only the files
+    * whose vocabulary sketch admits every term, then apply the exact
+    * row-level containment filter (a row matches iff its tokenized
+    * text contains ALL terms). False positives cost bytes; false
+    * negatives are impossible (a term a file contains is always in its
+    * sketch), so the search NEVER misses a document.
+    */
+  def readVersionSearch(spark: SparkSession, path: String, v: Long,
+      textCol: String, terms: Seq[String]): DataFrame =
+    readFiles(spark, path, v,
+        prunedFilesToken(spark, path, v, textCol, terms)._1)
+      .where(terms.map(t =>
+        array_contains(expr(tokensExpr(textCol)), t)).reduce(_ && _))
+
+  /** Row-level change feed between two committed versions (Delta's
+    * CHANGE DATA FEED read): one row per changed key with `_change_type`
+    * in {insert, delete, update_preimage, update_postimage} — pre/post
+    * pairs share the key, so a downstream MERGE can replay the delta
+    * without re-reading either snapshot.
+    *
+    * Derived by DIFF, not log replay: the feed is a single full-outer
+    * hash join of the two versions on `keyCols` (one shuffle on the
+    * key) with non-key columns compared via a null-safe struct
+    * equality, so it holds across any rewrite between them (snapshot,
+    * compaction, merge) — unlike [[tailSince]], which is append-only.
+    * Output size is delta-sized.
+    */
+  def changeFeed(spark: SparkSession, path: String,
+      fromVersion: Long, toVersion: Long, keyCols: Seq[String]): DataFrame = {
+    val from = readVersion(spark, path, fromVersion)
+    val to = readVersion(spark, path, toVersion)
+    require(from.columns.sameElements(to.columns),
+      s"changeFeed: schema drift between v$fromVersion and v$toVersion")
+    val valCols = from.columns.filterNot(keyCols.contains).toSeq
+    val f = from.select(struct(keyCols.map(col): _*).as("_k"),
+      struct(valCols.map(col): _*).as("_fv"))
+    val t = to.select(struct(keyCols.map(col): _*).as("_k2"),
+      struct(valCols.map(col): _*).as("_tv"))
+    val joined = f.join(t, col("_k") <=> col("_k2"), "full_outer")
+      .select(coalesce(col("_k"), col("_k2")).as("_key"),
+        col("_fv"), col("_tv"),
+        col("_k").isNotNull.as("_inFrom"), col("_k2").isNotNull.as("_inTo"))
+    val changed = joined.where(
+      !col("_inFrom") || !col("_inTo") || !(col("_fv") <=> col("_tv")))
+    val tagged = changed.select(col("_key"), col("_fv"), col("_tv"),
+      when(!col("_inFrom"), array(lit("insert")))
+        .when(!col("_inTo"), array(lit("delete")))
+        .otherwise(array(lit("update_preimage"), lit("update_postimage")))
+        .as("_ops"))
+      .select(col("_key"), col("_fv"), col("_tv"),
+        explode(col("_ops")).as("_change_type"))
+    val image = when(
+      col("_change_type").isin("delete", "update_preimage"), col("_fv"))
+      .otherwise(col("_tv"))
+    tagged.select(
+      keyCols.map(c => col(s"_key.$c").as(c)) ++
+        valCols.map(c => image.getField(c).as(c)) :+
+        col("_change_type"): _*)
+  }
+
+  /** Apply a change feed to a snapshot: drop deleted/pre-image keys,
+    * add inserted/post-image rows. `apply(v_from, changeFeed(from, to))`
+    * reconstructs `v_to` exactly (round-trip property, spec-proven) —
+    * the consumer-side contract that makes the feed a transport: a
+    * downstream replica applies delta-sized feeds instead of copying
+    * snapshots. One left-anti join on the key + a union — both
+    * key-partitioned, no driver data.
+    */
+  def applyChanges(snapshot: DataFrame, feed: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    val removedKeys = feed
+      .where(col("_change_type").isin("delete", "update_preimage"))
+      .select(keyCols.map(col): _*)
+    val added = feed
+      .where(col("_change_type").isin("insert", "update_postimage"))
+      .drop("_change_type")
+    snapshot.join(removedKeys, keyCols, "left_anti").unionByName(added)
+  }
+
+  /** Incremental view maintenance for SUM/COUNT-class aggregates: given
+    * the OLD aggregate of a base table and the base's change feed,
+    * produce the NEW aggregate without touching the base again. The
+    * 100 TB contract: the only full-size work in the whole operation is
+    * the delta-sized `feed.groupBy` shuffle — the snapshot aggregate is
+    * group-count-sized and the merge join is group-keyed.
+    *
+    * Algebra (valid for any abelian-group measure — SUM and COUNT here):
+    * each feed row carries sign +1 (`insert` / `update_postimage`) or
+    * −1 (`delete` / `update_preimage`); an update whose group changed
+    * moves its pre-image out of the old group and its post-image into
+    * the new one through the same signed sum. MIN/MAX are NOT
+    * maintainable this way (deletion of the current extreme needs the
+    * base) — callers with extremes re-aggregate or keep a heap.
+    *
+    * `oldAgg` columns: `groupCols ++ countCol ++ measures.map(_._2)`
+    * (all BIGINT). `feed` columns: `groupCols`, each `measures._1`
+    * base-measure column, and `_change_type`. Groups whose maintained
+    * row count reaches zero are dropped (the group disappeared from the
+    * base). An unrecognized `_change_type` raises instead of silently
+    * corrupting the aggregate.
+    */
+  def incrementalAgg(oldAgg: DataFrame, feed: DataFrame,
+      groupCols: Seq[String], countCol: String,
+      measures: Seq[(String, String)]): DataFrame = {
+    val sign = when(
+      col("_change_type").isin("insert", "update_postimage"), lit(1L))
+      .when(col("_change_type").isin("delete", "update_preimage"), lit(-1L))
+      .otherwise(raise_error(concat(
+        lit("incrementalAgg: unknown _change_type "),
+        col("_change_type"))).cast("long"))
+    val signed = feed.withColumn("_sign", sign)
+    val deltaAggs =
+      sum(col("_sign")).as(s"_d_$countCol") +:
+        measures.map { case (feedCol, aggCol) =>
+          sum(col("_sign") * col(feedCol)).as(s"_d_$aggCol")
+        }
+    val deltas = signed.groupBy(groupCols.map(col): _*)
+      .agg(deltaAggs.head, deltaAggs.tail: _*)
+    val aggCols = countCol +: measures.map(_._2)
+    val merged = oldAgg
+      .select((groupCols ++ aggCols).map(col): _*)
+      .join(deltas, groupCols, "full_outer")
+      .select(groupCols.map(col) ++ aggCols.map { c =>
+        (coalesce(col(c), lit(0L)) + coalesce(col(s"_d_$c"), lit(0L))).as(c)
+      }: _*)
+    merged.where(col(countCol) > 0)
+  }
+
+  /** Incremental maintenance of a ROW-LOCAL VIEW (the enrichment-join
+    * complement to [[incrementalAgg]]): given the view materialized at
+    * an old version, a [[changeFeed]] old→new, and the view definition
+    * `enrich` (any deterministic per-row transform of the base — a
+    * dim join, a projection, a filter; each base row must map to rows
+    * derived from that row alone), produce the view at the NEW version
+    * without re-running `enrich` over the base:
+    *
+    *   V_new = (V_old ∖ rows whose base pk was touched) ∪ enrich(inserts + postimages)
+    *
+    * Deletes need no own branch — a deleted pk lands in the touched
+    * set and contributes no re-add; an update whose pk itself changed
+    * is a touched pre-image pk plus a re-added post-image. Unknown
+    * `_change_type` values raise (the predicate routes every feed row
+    * through the validation branch) instead of silently corrupting
+    * the view.
+    *
+    * 100 TB contract: the only full-size stage is the pk anti-join
+    * against the old view — pk-keyed, so a view bucketed by pk
+    * co-locates it — and `enrich` runs over the DELTA only (with its
+    * dims broadcast, delta-sized map work). Direct recompute runs
+    * `enrich` over the world.
+    */
+  def incrementalView(oldView: DataFrame, feed: DataFrame,
+      pkCols: Seq[String], enrich: DataFrame => DataFrame): DataFrame = {
+    val known = Seq("insert", "update_postimage", "delete", "update_preimage")
+    // the touched-pk scan reads EVERY feed row, so it carries the
+    // change-type validation: a known type passes, anything else raises
+    val guard = when(col("_change_type").isin(known: _*), lit(true))
+      .otherwise(raise_error(concat(
+        lit("incrementalView: unknown _change_type "),
+        col("_change_type"))).cast("boolean"))
+    val touched = feed.where(guard)
+      .select(pkCols.map(col): _*).distinct()
+    val adds = feed
+      .where(col("_change_type").isin("insert", "update_postimage"))
+      .drop("_change_type")
+    oldView.join(touched, pkCols, "left_anti")
+      .unionByName(enrich(adds))
   }
 }

@@ -187,11 +187,11 @@ object Warehouse {
     }
 
   /** Versioned per-user summary built from the events table through
-    * [[VersionedTable]] — the c6 time-travel fixture. Three commits:
-    * v1 aggregates the `event_id % 3 <> 0` batch, v2 merges in the
-    * rest with the q43/streaming full-outer upsert shape, v3 is
-    * `compact(v2)` (data-identical, fewer files). Returns the LATEST
-    * snapshot (post-compaction), so the c6 diff against
+    * [[ManifestTable]] — the c6 time-travel fixture. Three commits:
+    * v1 aggregates the `event_id % 3 <> 0` batch, v2 is a full
+    * snapshot merging in the rest with the q43/streaming full-outer
+    * upsert shape, v3 is `compact(v2)` (data-identical, fewer files).
+    * Returns the LATEST snapshot (post-compaction), so the c6 diff against
     * `readVersion(1)` proves both time travel and that compaction
     * preserved every value — the oracle recomputes both versions from
     * the raw events and any compaction/versioning corruption breaks
@@ -214,12 +214,11 @@ object Warehouse {
         .withColumn("cents", expr("CAST(floor(value * 100) AS BIGINT)"))
       def agg(df: DataFrame): DataFrame = df.groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
-      VersionedTable.commit(
-        agg(events.where(col("event_id") % 3 =!= 0)), path, 1L)
+      ManifestTable.commit(agg(events.where(col("event_id") % 3 =!= 0)), path)
       val delta = agg(events.where(col("event_id") % 3 === 0))
         .select(col("user_id").as("d_uid"), col("n_events").as("d_n"),
           col("total_cents").as("d_c"))
-      val merged = VersionedTable.readVersion(s, path, 1L)
+      val merged = ManifestTable.readVersion(s, path, 1L)
         .join(delta, col("d_uid") === col("user_id"), "full_outer")
         .select(
           coalesce(col("user_id"), col("d_uid")).as("user_id"),
@@ -227,15 +226,15 @@ object Warehouse {
             + coalesce(col("d_n"), lit(0L))).as("n_events"),
           (coalesce(col("total_cents"), lit(0L))
             + coalesce(col("d_c"), lit(0L))).as("total_cents"))
-      VersionedTable.commit(merged, path, 2L)
-      VersionedTable.compact(s, path)
-      VersionedTable.latest(s, path)
+      ManifestTable.commit(merged, path)
+      ManifestTable.compact(s, path)
+      ManifestTable.latest(s, path)
     }
 
   /** A range-CLUSTERED committed snapshot of the user summary for the
     * data-skipping surface: one version, `repartitionByRange(8)` on
     * user_id so each file covers a disjoint user band, with a
-    * [[VersionedTable.writeStats]] manifest on user_id. The layout is
+    * [[ManifestTable.extendStats]] stats on user_id. The layout is
     * the thing under test — c9 reads it through the manifest prune and
     * must still be value-exact against the raw events.
     */
@@ -255,16 +254,16 @@ object Warehouse {
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
         .repartitionByRange(8, col("user_id"))
-      VersionedTable.commit(summary, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("user_id"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(summary, path)
+      ManifestTable.extendStats(s, path, 1L, Seq("user_id"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 
   /** Events z-clustered on (user_id, cents) as a committed version
-    * with stats manifests on BOTH columns — the 2-d data-skipping
+    * with per-file stats on BOTH columns — the 2-d data-skipping
     * fixture: Morton interleaving makes each file a compact rectangle
     * in both dimensions, so c10's box predicate prunes on both
-    * manifests at once (a single-key clustering would give tight
+    * stats at once (a single-key clustering would give tight
     * stats on one dimension only).
     */
   def eventsZClusteredPath(dir: String): String = {
@@ -287,9 +286,9 @@ object Warehouse {
         .repartitionByRange(16, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
-      VersionedTable.commit(clustered, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("user_id", "cents"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(clustered, path)
+      ManifestTable.extendStats(s, path, 1L, Seq("user_id", "cents"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 
   /** Deterministic content-hash shard id in [0, nShards): first hex
@@ -320,10 +319,10 @@ object Warehouse {
     }
 
   /** Document metadata committed HASH-distributed on doc_id (8 files,
-    * deliberately unclustered) with BOTH manifests published: min/max
-    * stats, which cannot skip on this layout (every file spans ~the
+    * deliberately unclustered) with BOTH per-file sketches published:
+    * min/max stats, which cannot skip on this layout (every file spans ~the
     * full id domain), and per-file blooms, which can — the fixture
-    * contrasting the two data-skipping paths (VersionedTableSpec
+    * contrasting the two data-skipping paths (ManifestTableSpec
     * asserts the file counts; c12 reads through the bloom path).
     */
   def documentsHashedPath(dir: String): String = {
@@ -340,14 +339,14 @@ object Warehouse {
       val docs = Tables.documents(s, dir)
         .select("doc_id", "lang", "source", "n_chars")
         .repartition(8, col("doc_id"))
-      VersionedTable.commit(docs, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("doc_id"))
-      VersionedTable.writeBloom(s, path, 1L, Seq("doc_id"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(docs, path)
+      ManifestTable.extendStats(s, path, 1L, Seq("doc_id"))
+      ManifestTable.extendBloom(s, path, 1L, Seq("doc_id"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 
   /** Documents WITH the text column as a hash-distributed versioned
-    * table carrying a token-bloom manifest (c13's full-text skip
+    * table carrying per-file token blooms (c13's full-text skip
     * index). Hash layout on doc_id — the worst case for range stats,
     * the case token blooms are for.
     */
@@ -640,8 +639,8 @@ object Warehouse {
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "text")
         .repartition(8, col("doc_id"))
-      VersionedTable.commit(docs, path, 1L)
-      VersionedTable.writeTokenBloom(s, path, 1L, "text")
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(docs, path)
+      ManifestTable.extendTokenBloom(s, path, 1L, "text")
+      ManifestTable.readVersion(s, path, 1L)
     }
 }

@@ -599,69 +599,52 @@ object EventStream {
     * delta aggregate into the current version with the same
     * full-outer/coalesce merge shape (update-matched, insert-new).
     *
-    * Versioned MVCC-style commits instead of in-place mutation:
-    * batch k writes `v<k>` derived from the latest version below k,
-    * so a reader always scans a complete immutable snapshot, history
-    * is auditable, and a RETRIED micro-batch is idempotent by
-    * construction — it recomputes the same `v<k>` from the same
-    * predecessor (the delta is deterministic from the replayed batch).
-    * This is the manifest/snapshot pattern table formats productionize;
-    * on a plain filesystem the version directory stands in for the
-    * manifest. Scale shape: the delta is batch-bounded, the dim is
-    * key-bounded, and the merge is one key-hash full-outer join —
-    * bucket the dim by user_id at warehouse scale and it is
-    * exchange-free on the base side.
+    * Versioned MVCC-style commits instead of in-place mutation: each
+    * batch publishes the merged dim as a full-snapshot
+    * [[graft.sources.ManifestTable.commit]] derived from the latest
+    * version, with the batch id as the commit's txn. A reader always
+    * scans a complete immutable version, history is auditable (time
+    * travel / compaction / vacuum are the table's own), and a
+    * REPLAYED micro-batch finds its txn already in a committed
+    * manifest and writes nothing — the [[appendEventFeed]] dedup, on
+    * the one commit path and crash story of the manifest table. Scale
+    * shape: the delta is batch-bounded, the dim is key-bounded, and
+    * the merge is one key-hash full-outer join — bucket the dim by
+    * user_id at warehouse scale and it is exchange-free on the base
+    * side.
     */
-  /** Versions under `path` whose write COMMITTED — the commit layout
-    * and its crash story live in [[graft.sources.VersionedTable]],
-    * which also serves the read side (time travel / history /
-    * compaction) over the snapshots this sink writes.
-    */
-  private def committedVersions(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] =
-    graft.sources.VersionedTable.committedVersions(spark, path)
-
   def upsertUserSummary(events: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        import graft.sources.ManifestTable
         val spark = batch.sparkSession
         val delta = batch.groupBy("user_id")
           .agg(count(lit(1)).as("n_events"),
             sum(expr("CAST(floor(value * 100) AS BIGINT)")).as("total_cents"))
-        val prevV = committedVersions(spark, path).filter(_ < batchId)
-          .sorted.lastOption
-        val merged = prevV match {
-          case None => delta
-          case Some(pv) =>
-            val base = spark.read.parquet(s"$path/v$pv")
-            base.join(delta.select(col("user_id").as("d_uid"),
-                col("n_events").as("d_n"), col("total_cents").as("d_c")),
-                col("d_uid") === col("user_id"), "full_outer")
-              .select(
-                coalesce(col("user_id"), col("d_uid")).as("user_id"),
-                (coalesce(col("n_events"), lit(0L))
-                  + coalesce(col("d_n"), lit(0L))).as("n_events"),
-                (coalesce(col("total_cents"), lit(0L))
-                  + coalesce(col("d_c"), lit(0L))).as("total_cents"))
-        }
-        // Two-phase commit (staging write + atomic publish, committed
-        // retries keep the existing snapshot) — the shared layout in
-        // [[graft.sources.VersionedTable.commit]].
-        graft.sources.VersionedTable.commit(merged, path, batchId)
+        val merged =
+          if (ManifestTable.committedVersions(spark, path).isEmpty) delta
+          else ManifestTable.latest(spark, path)
+            .join(delta.select(col("user_id").as("d_uid"),
+              col("n_events").as("d_n"), col("total_cents").as("d_c")),
+              col("d_uid") === col("user_id"), "full_outer")
+            .select(
+              coalesce(col("user_id"), col("d_uid")).as("user_id"),
+              (coalesce(col("n_events"), lit(0L))
+                + coalesce(col("d_n"), lit(0L))).as("n_events"),
+              (coalesce(col("total_cents"), lit(0L))
+                + coalesce(col("d_c"), lit(0L))).as("total_cents"))
+        // lazy until committed: a replayed batch id stops at the txn
+        // check inside commit, before any row is computed or written
+        ManifestTable.commit(merged, path, txnId = Some(batchId))
         ()
       }
 
-  /** The latest COMMITTED snapshot of [[upsertUserSummary]]'s dim
-    * (`_SUCCESS`-gated — see [[committedVersions]]).
-    */
+  /** The latest committed version of [[upsertUserSummary]]'s dim. */
   def latestUserSummary(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val vs = committedVersions(spark, path)
-    require(vs.nonEmpty, s"no committed version under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+      path: String): DataFrame =
+    graft.sources.ManifestTable.latest(spark, path)
 
   /** Exactly-once APPEND sink into the shared-file manifest table —
     * the fact-scale complement to [[upsertUserSummary]]'s dim-sized
@@ -690,7 +673,7 @@ object EventStream {
   case class RollupOut(bucket: Long, n_users: Long, sum_events: Long,
       sum_cents: Long, tombstone: Boolean)
 
-  /** Streaming twin of [[graft.sources.VersionedTable.incrementalAgg]]:
+  /** Streaming twin of [[graft.sources.ManifestTable.incrementalAgg]]:
     * a CDC feed of user_summary rows (columns user_id, n_events,
     * total_cents, _change_type) maintains the bucket rollup as keyed
     * state, emitting the updated row for every bucket a micro-batch

@@ -11,9 +11,16 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils,
   * plan construction helpers package-private; a subpackage of
   * `org.apache.spark.sql` is the sanctioned-by-convention escape hatch
   * (the same device Delta, Iceberg and Sedona use for their planner
-  * extensions). Everything here is a thin forwarder — no behavior.
+  * extensions). It also reaches the `private[spark]` listener bus for
+  * tools/ProfileMain. Everything here is a thin forwarder — no behavior.
   */
 object PlanBridge {
+
+  /** Block until every event posted so far has reached the listeners
+    * (the listener bus is asynchronous and `private[spark]`).
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** DataFrame over an already-analyzed logical subtree. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

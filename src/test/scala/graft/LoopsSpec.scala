@@ -165,4 +165,42 @@ class LoopsSpec extends AnyFunSuite {
     assert(wide === narrow)
     assert(narrow(12L) === 1L && narrow(102L) === 100L && narrow(201L) === 200L)
   }
+
+  test("scoped confs are per session: two threads, each on its own " +
+      "newSession(), see only their own values and are restored") {
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val widthKey = "spark.sql.shuffle.partitions"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    val widths = Seq(2, 3) // both narrower than the 4-wide test session
+    assume(widths.forall(_ < spark.sessionState.conf.numShufflePartitions))
+    def confOf(s: org.apache.spark.sql.SparkSession) =
+      Seq(coalesceKey, widthKey, aqeKey).map(s.conf.getOption)
+    val before = sessions.map(confOf)
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    def await(): Unit = barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, (Seq[String], Int)]()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val threads = sessions.zip(widths).zipWithIndex.map { case ((s, w), i) =>
+      new Thread(() =>
+        try Loops.withStablePartitioning(s) {
+          Loops.withShufflePartitions(s, w) {
+            await() // both threads are inside both scopes now
+            val parts = s.range(0, 100).repartition(col("id"))
+              .rdd.getNumPartitions // the scope binds execution too
+            seen.put(i, (Seq(coalesceKey, widthKey, aqeKey).map(s.conf.get),
+              parts))
+            await() // neither unwinds before both have looked
+          }
+        } catch { case t: Throwable => failure.compareAndSet(null, t) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failure.get).foreach(t => throw t)
+    widths.zipWithIndex.foreach { case (w, i) =>
+      assert(seen.get(i) === ((Seq("false", w.toString, "false"), w)),
+        s"thread $i saw another session's scope")
+    }
+    assert(sessions.map(confOf) === before, "a session's conf was not restored")
+  }
 }

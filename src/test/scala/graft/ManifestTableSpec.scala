@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ManifestTable
 
-/** The shared-file manifest layout: O(delta) appends, per-file
-  * metadata outliving versions, refcounting vacuum, CAS commits.
+/** The versioned-table layout: O(delta) appends and full-snapshot
+  * commits over one shared pool, time travel, per-file metadata
+  * (stats, key and token blooms) outliving versions, data skipping,
+  * change feeds, refcounting vacuum, CAS commits.
   */
 class ManifestTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -21,6 +23,11 @@ class ManifestTableSpec extends AnyFunSuite {
     import spark.implicits._
     (lo until hi).map(i => (i, i * 3)).toDF("k", "v")
       .repartition(parts, col("k"))
+  }
+
+  private def kv(rows: (Long, Long)*) = {
+    import spark.implicits._
+    rows.toDF("k", "v")
   }
 
   private def fs(p: String) =
@@ -532,5 +539,561 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.readVersion(spark, p, 1L).count() == 50L)
     val (_, dead) = ManifestTable.vacuum(spark, p, keep = 1)
     assert(dead.contains("v9_orphan.parquet"))
+  }
+
+  // ---- full-snapshot commits and time travel ----
+
+  test("snapshot commit lists only its own files; a retried txn writes nothing") {
+    val p = freshPath()
+    assert(ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p) == 1L)
+    val v2 = ManifestTable.commit(kv(1L -> 11L), p, txnId = Some(4L))
+    assert(v2 == 2L)
+    // a snapshot shares nothing with its parent
+    assert(ManifestTable.files(spark, p, 2L).toSet
+      .intersect(ManifestTable.files(spark, p, 1L).toSet).isEmpty)
+    assert(ManifestTable.readManifest(spark, p, 2L)._2 == Some(4L))
+    // replay of txn 4: same version back, no new version, no pool files
+    val poolBefore = fs(p).listStatus(new Path(p, "_pool")).length
+    assert(ManifestTable.commit(kv(9L -> 9L), p, txnId = Some(4L)) == 2L)
+    assert(ManifestTable.committedVersions(spark, p).sorted == Seq(1L, 2L))
+    assert(fs(p).listStatus(new Path(p, "_pool")).length == poolBefore)
+    assert(ManifestTable.latest(spark, p).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq(1L -> 11L))
+  }
+
+  test("time travel reads each immutable version; latest tracks max") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p)
+    ManifestTable.commit(kv(1L -> 11L, 2L -> 20L, 3L -> 30L), p)
+    assert(ManifestTable.committedVersions(spark, p).sorted == Seq(1L, 2L))
+    assert(ManifestTable.readVersion(spark, p, 1L).count() == 2)
+    assert(ManifestTable.latestVersion(spark, p) == 2L)
+    val latest = ManifestTable.latest(spark, p)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(latest.toSeq == Seq(1L -> 11L, 2L -> 20L, 3L -> 30L))
+    // v1 is undisturbed by v2's commit (immutability)
+    val v1 = ManifestTable.readVersion(spark, p, 1L)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(v1.toSeq == Seq(1L -> 10L, 2L -> 20L))
+  }
+
+  test("reading an uncommitted or absent version fails loudly") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L), p)
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersion(spark, p, 7L)
+    }
+    // a manifest written but never renamed into place (a publish that
+    // crashed before its rename) is invisible and unreadable
+    val out = fs(p).create(new Path(p, "_manifest_tmp_v5_1"), false)
+    out.write(ManifestTable.files(spark, p, 1L)
+      .map(n => "\"" + n + "\"").mkString("[", ",", "]").getBytes("UTF-8"))
+    out.close()
+    assert(ManifestTable.committedVersions(spark, p) == Seq(1L))
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersion(spark, p, 5L)
+    }
+  }
+
+  test("compaction produces a data-identical new version with fewer files") {
+    val p = freshPath()
+    ManifestTable.commit(kv((1L to 100L).map(i => i -> i * 2): _*)
+      .repartition(8), p)
+    def nFiles(v: Long) = ManifestTable.history(spark, p)
+      .where(col("version") === v).select("n_files").head().getLong(0)
+    val before = nFiles(1L)
+    assert(before > 1, s"fixture should start multi-file, got $before files")
+    val nv = ManifestTable.compact(spark, p, targetFiles = 1)
+    assert(nv == 2L)
+    assert(nFiles(2L) == 1L)
+    // data-identical both ways
+    val v1 = ManifestTable.readVersion(spark, p, 1L)
+    val v2 = ManifestTable.readVersion(spark, p, 2L)
+    assert(v1.exceptAll(v2).isEmpty && v2.exceptAll(v1).isEmpty)
+    // and v1 files untouched (readers of the old version undisturbed)
+    assert(nFiles(1L) == before)
+  }
+
+  test("history lists versions in order with file and byte stats") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 1L), p)
+    ManifestTable.commit(kv(1L -> 1L, 2L -> 2L), p)
+    val h = ManifestTable.history(spark, p).collect()
+    assert(h.map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(h.forall(r => r.getLong(1) >= 1 && r.getLong(2) > 0))
+    // full snapshots share no file with their parent
+    assert(h.forall(_.getLong(3) == 0L))
+  }
+
+  test("vacuum keeps the newest versions; survivors stay readable") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L), p)
+    ManifestTable.commit(kv(1L -> 11L), p)
+    ManifestTable.extendStats(spark, p, 2L, Seq("k"))
+    ManifestTable.extendBloom(spark, p, 2L, Seq("k"))
+    ManifestTable.commit(kv(1L -> 12L), p)
+    val v1Files = ManifestTable.files(spark, p, 1L)
+    val (dropped, dead) = ManifestTable.vacuum(spark, p, keep = 2)
+    assert(dropped == Seq(1L) && dead == v1Files.sorted)
+    assert(ManifestTable.committedVersions(spark, p).sorted == Seq(2L, 3L))
+    // survivor time travel intact, including its per-file metadata
+    assert(ManifestTable.readVersion(spark, p, 2L).head().getLong(1) == 11L)
+    assert(ManifestTable.statsFor(spark, p, 2L).count() == 1L)
+    assert(ManifestTable.prunedFilesBloom(spark, p, 2L, "k", Seq(1L))
+      ._1.nonEmpty)
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersion(spark, p, 1L)
+    }
+    // keep >= versions present: a no-op, never deletes the latest
+    assert(ManifestTable.vacuum(spark, p, keep = 5) == ((Nil, Nil)))
+    // v2's files die with their stats and bloom rows
+    val v2Files = ManifestTable.files(spark, p, 2L)
+    val (_, dead2) = ManifestTable.vacuum(spark, p, keep = 1)
+    assert(dead2 == v2Files.sorted)
+    for (t <- Seq("_filestats", "_filebloom"))
+      assert(spark.read.parquet(s"$p/$t").where(col("file").isin(dead2: _*))
+        .isEmpty, s"vacuum left $t rows for deleted files")
+  }
+
+  // ---- change feed, apply, incremental maintenance ----
+
+  test("change feed classifies insert/delete/update and skips unchanged keys") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L, 3L -> 30L), p)
+    ManifestTable.commit(kv(2L -> 20L, 3L -> 31L, 4L -> 40L), p)
+    val feed = ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k"))
+      .orderBy("k", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    assert(feed.toSeq == Seq(
+      (1L, 10L, "delete"),
+      (3L, 31L, "update_postimage"), // lexical: post < pre
+      (3L, 30L, "update_preimage"),
+      (4L, 40L, "insert")))
+    // key 2 is untouched and must NOT appear: the feed is delta-sized
+  }
+
+  test("change feed across a compaction boundary has zero spurious changes") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L).repartition(4), p)
+    val nv = ManifestTable.compact(spark, p) // v2: same rows, fewer files
+    assert(ManifestTable.changeFeed(spark, p, 1L, nv, Seq("k")).isEmpty)
+  }
+
+  test("applying a change feed to the old snapshot reconstructs the new one") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L, 3L -> 30L), p)
+    ManifestTable.commit(kv(2L -> 21L, 3L -> 30L, 4L -> 40L, 5L -> 50L), p)
+    val feed = ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k"))
+    val rebuilt = ManifestTable.applyChanges(
+      ManifestTable.readVersion(spark, p, 1L), feed, Seq("k"))
+    val v2 = ManifestTable.readVersion(spark, p, 2L)
+    assert(rebuilt.exceptAll(v2).isEmpty && v2.exceptAll(rebuilt).isEmpty)
+  }
+
+  test("change feed rejects schema drift between versions") {
+    import spark.implicits._
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L), p)
+    ManifestTable.commit(Seq((1L, 10L)).toDF("k", "renamed"), p)
+    intercept[IllegalArgumentException] {
+      ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k"))
+    }
+  }
+
+  // group key = k % 2, measure = v; the maintained rollup must equal a
+  // direct re-aggregation of the new snapshot for every feed shape
+  private def rollup(d: org.apache.spark.sql.DataFrame) = d
+    .withColumn("g", pmod(col("k"), lit(2L)))
+    .groupBy("g")
+    .agg(count(lit(1)).as("n"), sum("v").as("sv"))
+
+  private def maintainedEqualsDirect(p: String): Unit = {
+    val feed = ManifestTable
+      .changeFeed(spark, p, 1L, 2L, Seq("k"))
+      .withColumn("g", pmod(col("k"), lit(2L)))
+    val maintained = ManifestTable.incrementalAgg(
+      rollup(ManifestTable.readVersion(spark, p, 1L)), feed,
+      Seq("g"), "n", Seq("v" -> "sv"))
+    val direct = rollup(ManifestTable.readVersion(spark, p, 2L))
+    assert(maintained.exceptAll(direct).isEmpty
+      && direct.exceptAll(maintained).isEmpty)
+  }
+
+  test("incrementalAgg maintains the rollup through insert/update/delete") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L, 3L -> 30L), p)
+    // 2 updated, 3 deleted, 4+5 inserted, 1 unchanged
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 25L, 4L -> 40L, 5L -> 50L), p)
+    maintainedEqualsDirect(p)
+  }
+
+  test("incrementalAgg drops a group whose last keys are deleted") {
+    val p = freshPath()
+    // odd group = {1, 3}; v2 deletes both, so group 1 must VANISH from
+    // the maintained rollup (not linger as a zero row)
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L, 3L -> 30L), p)
+    ManifestTable.commit(kv(2L -> 20L, 6L -> 60L), p)
+    maintainedEqualsDirect(p)
+    val feed = ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k"))
+      .withColumn("g", pmod(col("k"), lit(2L)))
+    val m = ManifestTable.incrementalAgg(
+      rollup(ManifestTable.readVersion(spark, p, 1L)), feed,
+      Seq("g"), "n", Seq("v" -> "sv"))
+    assert(m.where(col("g") === 1L).isEmpty)
+  }
+
+  test("incrementalAgg with an empty feed is the identity") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p)
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p)
+    maintainedEqualsDirect(p)
+  }
+
+  test("incrementalAgg raises on an unknown change type") {
+    import spark.implicits._
+    val old = Seq((0L, 1L, 10L)).toDF("g", "n", "sv")
+    val feed = Seq((0L, 7L, "upsert")).toDF("g", "v", "_change_type")
+    val e = intercept[Exception] {
+      ManifestTable.incrementalAgg(old, feed, Seq("g"), "n",
+        Seq("v" -> "sv")).collect()
+    }
+    assert(e.getMessage.contains("unknown _change_type")
+      || e.getCause != null
+      && e.getCause.getMessage.contains("unknown _change_type"))
+  }
+
+  // view definition for the incrementalView tests: dim-join + derive
+  private def viewOf(base: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val dim = Seq(0L -> "even", 1L -> "odd").toDF("par", "tag")
+    base.withColumn("par", pmod(col("k"), lit(2L)))
+      .join(broadcast(dim), Seq("par"))
+      .select(col("k"), col("v"), (col("v") * 10L).as("v10"), col("tag"))
+  }
+
+  private def viewMaintainedEqualsDirect(p: String): Unit = {
+    val feed = ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k"))
+    val m = ManifestTable.incrementalView(
+      viewOf(ManifestTable.readVersion(spark, p, 1L)), feed,
+      Seq("k"), viewOf)
+    val d = viewOf(ManifestTable.readVersion(spark, p, 2L))
+    assert(m.collect().map(_.toSeq).toSet === d.collect().map(_.toSeq).toSet)
+  }
+
+  test("incrementalView maintains the join view through insert/update/delete") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L, 3L -> 30L), p)
+    // 2 updated, 3 deleted, 4+5 inserted, 1 unchanged
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 25L, 4L -> 40L, 5L -> 50L), p)
+    viewMaintainedEqualsDirect(p)
+  }
+
+  test("incrementalView: empty feed is the identity; all-deleted empties the view") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p)
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p)
+    viewMaintainedEqualsDirect(p)
+    val p2 = freshPath()
+    ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), p2)
+    ManifestTable.commit(kv(), p2)
+    viewMaintainedEqualsDirect(p2)
+  }
+
+  test("incrementalView chains: applying successive feeds equals direct at the head") {
+    // the production life of a maintained view is a CHAIN of deltas,
+    // not one hop — randomized three-version history, maintained
+    // v1→v2→v3 through two incremental applications
+    val rnd = new scala.util.Random(5151)
+    val p = freshPath()
+    def randSnap(keys: Seq[Long]) = kv(keys.map(k => k -> rnd.nextLong(100L)): _*)
+    val k1 = (1L to 40L).filter(_ => rnd.nextBoolean())
+    val k2 = (1L to 40L).filter(_ => rnd.nextBoolean())
+    val k3 = (1L to 40L).filter(_ => rnd.nextBoolean())
+    ManifestTable.commit(randSnap(k1), p)
+    ManifestTable.commit(randSnap(k2), p)
+    ManifestTable.commit(randSnap(k3), p)
+    val v1view = viewOf(ManifestTable.readVersion(spark, p, 1L))
+    val m2 = ManifestTable.incrementalView(v1view,
+      ManifestTable.changeFeed(spark, p, 1L, 2L, Seq("k")), Seq("k"), viewOf)
+    val m3 = ManifestTable.incrementalView(m2,
+      ManifestTable.changeFeed(spark, p, 2L, 3L, Seq("k")), Seq("k"), viewOf)
+    val direct = viewOf(ManifestTable.readVersion(spark, p, 3L))
+    assert(m3.collect().map(_.toSeq).toSet ===
+      direct.collect().map(_.toSeq).toSet)
+  }
+
+  test("incrementalView raises on an unknown _change_type") {
+    import spark.implicits._
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L), p)
+    val badFeed = Seq((2L, 20L, "upsert")).toDF("k", "v", "_change_type")
+    val m = ManifestTable.incrementalView(
+      viewOf(ManifestTable.readVersion(spark, p, 1L)), badFeed,
+      Seq("k"), viewOf)
+    val e = intercept[Exception] { m.collect() }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("unknown _change_type")), e.toString)
+  }
+
+  // ---- min/max stats pruning ----
+
+  /** `kept` of `p`'s v1 files for the band on k, and v1's file count. */
+  private def keptOnK(p: String, lo: Long, hi: Long): (Seq[String], Int) =
+    (ManifestTable.prunedFilesMulti(spark, p, 1L, Seq(("k", lo, hi))),
+      ManifestTable.files(spark, p, 1L).size)
+
+  test("stats prune skips files on a clustered layout and stays exact") {
+    val p = freshPath()
+    ManifestTable.commit(kv((1L to 400L).map(i => i -> i * 3): _*)
+      .repartitionByRange(8, col("k")), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+    val (kept, total) = keptOnK(p, 101L, 150L)
+    assert(total == 8 && kept.nonEmpty && kept.size < 8,
+      s"expected a real skip on the clustered layout: $kept of $total")
+    val pruned = ManifestTable.readVersionPruned(spark, p, 1L,
+      "k", 101L, 150L)
+    val full = ManifestTable.readVersion(spark, p, 1L)
+      .where(col("k") >= 101L && col("k") <= 150L)
+    assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
+    // inclusive edges: the boundary keys themselves survive the prune
+    assert(pruned.where(col("k").isin(101L, 150L)).count() == 2)
+  }
+
+  test("stats prune is correct (if skip-free) on an UNclustered layout") {
+    val p = freshPath()
+    // hash-partitioned: every file spans most of the key domain, so
+    // pruning may keep everything — but must never lose a row
+    ManifestTable.commit(
+      kv((1L to 400L).map(i => i -> i * 3): _*).repartition(8), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+    assert(ManifestTable.readVersionPruned(spark, p, 1L, "k", 101L, 150L)
+      .count() == 50L)
+  }
+
+  test("stats prune outside the key domain reads zero files") {
+    val p = freshPath()
+    ManifestTable.commit(
+      kv((1L to 100L).map(i => i -> i): _*).repartitionByRange(4, col("k")), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+    assert(keptOnK(p, 1000L, 2000L)._1.isEmpty)
+    assert(ManifestTable.readVersionPruned(spark, p, 1L,
+      "k", 1000L, 2000L).isEmpty)
+  }
+
+  test("2-d box over a z-ordered layout prunes on BOTH manifests; " +
+      "single-key clustering cannot skip the second dimension") {
+    import spark.implicits._
+    // 64×64 grid; the 8×8 box is 1/64 of the domain
+    val grid = (0L until 4096L).map(i => (i % 64L, i / 64L))
+      .toDF("x", "y")
+    val bands = Seq(("x", 24L, 31L), ("y", 24L, 31L))
+
+    def committed(layout: org.apache.spark.sql.DataFrame): String = {
+      val p = freshPath()
+      ManifestTable.commit(layout, p)
+      ManifestTable.extendStats(spark, p, 1L, Seq("x", "y"))
+      p
+    }
+    val zp = committed(grid
+      .withColumn("__z", graft.operators.ZOrder.zkey16(col("x"), col("y")))
+      .repartitionByRange(16, col("__z"))
+      .sortWithinPartitions("__z").drop("__z"))
+    val xp = committed(grid.repartitionByRange(16, col("x"))
+      .sortWithinPartitions("x"))
+
+    def keptCount(p: String): Int =
+      ManifestTable.prunedFilesMulti(spark, p, 1L, bands).size
+    // x-clustered: the x band keeps few files, but EVERY kept file
+    // spans the full y domain, so the y stats remove nothing more.
+    // z-clustered: each file is a compact rectangle; the intersection
+    // keeps only files near the box.
+    val zKept = keptCount(zp)
+    val xKept = keptCount(xp)
+    assert(zKept < 16 && zKept <= xKept,
+      s"z-order kept $zKept files, x-clustering kept $xKept")
+    // correctness: the pruned read equals the brute filter on both
+    for (p <- Seq(zp, xp)) {
+      val pruned = ManifestTable.readVersionPrunedMulti(spark, p, 1L, bands)
+      val full = ManifestTable.readVersion(spark, p, 1L)
+        .where(col("x").between(24L, 31L) && col("y").between(24L, 31L))
+      assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
+      assert(pruned.count() == 64L)
+    }
+  }
+
+  test("pruned read without a stats manifest fails loudly") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 1L), p)
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersionPruned(spark, p, 1L, "k", 0L, 10L).collect()
+    }
+  }
+
+  test("IN-list prune schedules only files that can hold the keys") {
+    val p = freshPath()
+    ManifestTable.commit(
+      kv((1L to 400L).map(i => i -> i): _*).repartitionByRange(8, col("k")),
+      p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+    // three scattered point keys -> at most three files survive
+    val keys = Seq(7L, 203L, 399L)
+    val pruned = ManifestTable.readVersionPrunedByKeys(spark, p, 1L, "k", keys)
+    val got = pruned.where(col("k").isin(keys: _*))
+      .orderBy("k").collect().map(_.getLong(0)).toSeq
+    assert(got == keys)
+    val survivors = keys.flatMap(key => keptOnK(p, key, key)._1).distinct
+    val total = ManifestTable.files(spark, p, 1L).size
+    assert(survivors.size <= 3 && survivors.size < total)
+    assert(pruned.inputFiles.length == survivors.size)
+  }
+
+  // ---- per-file key blooms: layout-independent point skipping ----
+
+  test("bloom prune skips on a HASH layout where min/max keeps every file") {
+    val p = freshPath()
+    // hash-distributed on k: every file spans ~the full [1, 400] domain
+    ManifestTable.commit(
+      kv((1L to 400L).map(i => i -> i): _*).repartition(8, col("k")), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+    ManifestTable.extendBloom(spark, p, 1L, Seq("k"))
+    val probes = Seq(7L, 203L, 399L)
+    // the range stats are useless here: every file's [min, max]
+    // admits every probe
+    val byRange = ManifestTable.readVersionPrunedByKeys(
+      spark, p, 1L, "k", probes).inputFiles.length
+    assert(byRange == 8, "fixture broke: hash layout should defeat min/max pruning")
+    // the bloom keeps at most one file per probed key
+    val (kept, total) = ManifestTable.prunedFilesBloom(
+      spark, p, 1L, "k", probes)
+    assert(total == 8L)
+    assert(kept.size <= probes.size && kept.nonEmpty,
+      s"bloom kept ${kept.size} of $total files")
+    // and the pruned read is exact
+    val got = ManifestTable.readVersionPrunedBloom(spark, p, 1L, "k", probes)
+      .orderBy("k").collect().map(_.getLong(0)).toSeq
+    assert(got == probes)
+  }
+
+  test("bloom prune for absent keys reads zero rows; " +
+      "pruned files provably hold none of the probes") {
+    val p = freshPath()
+    ManifestTable.commit(
+      kv((1L to 400L).map(i => i -> i): _*).repartition(8, col("k")), p)
+    ManifestTable.extendBloom(spark, p, 1L, Seq("k"))
+    val got = ManifestTable.readVersionPrunedBloom(spark, p, 1L,
+      "k", Seq(100000L, 200000L))
+    assert(got.count() == 0L)
+    // no-false-negative direction: every PRESENT key keeps >= 1 file
+    (1L to 400L by 37L).foreach { v =>
+      assert(ManifestTable.prunedFilesBloom(spark, p, 1L, "k", Seq(v))
+        ._1.nonEmpty, s"present key $v was falsely pruned")
+    }
+  }
+
+  test("bloom prune without a manifest for the column fails loudly") {
+    val p = freshPath()
+    ManifestTable.commit(kv(1L -> 10L), p)
+    ManifestTable.extendBloom(spark, p, 1L, Seq("v"))
+    intercept[IllegalArgumentException] {
+      ManifestTable.prunedFilesBloom(spark, p, 1L, "k", Seq(1L))
+    }
+  }
+
+  // ---- per-file token blooms: full-text-search file skipping ----
+
+  /** 800 docs in 8 range-partitioned files; every doc carries the
+    * corpus-wide token "common" plus its block's exclusive marker
+    * "markerN" (N = doc_id / 100 = the file it lands in), so each
+    * marker's vocabulary entry exists in exactly one file.
+    */
+  private def tokenFixture(): String = {
+    import spark.implicits._
+    val p = freshPath()
+    val docs = (0L until 800L).map(i =>
+      (i, s"common text with marker${i / 100} inside")).toDF("doc_id", "text")
+    ManifestTable.commit(docs.repartitionByRange(8, col("doc_id")), p)
+    ManifestTable.extendTokenBloom(spark, p, 1L, "text")
+    p
+  }
+
+  test("token search schedules only the files whose vocabulary admits the term") {
+    val p = tokenFixture()
+    // a marker term lives in one block = one range file
+    val (kept, total) = ManifestTable.prunedFilesToken(
+      spark, p, 1L, "text", Seq("marker3"))
+    assert(total == 8L)
+    assert(kept.size == 1, s"marker3 should admit 1 of 8 files, got $kept")
+    // the corpus-wide term admits everything (no false prune)
+    assert(ManifestTable.prunedFilesToken(
+      spark, p, 1L, "text", Seq("common"))._1.size == 8)
+    // AND semantics intersect at file level: common AND marker3 -> 1 file
+    assert(ManifestTable.prunedFilesToken(
+      spark, p, 1L, "text", Seq("common", "marker3"))._1.size == 1)
+    // and the search is row-exact on the survivors
+    val got = ManifestTable.readVersionSearch(
+      spark, p, 1L, "text", Seq("marker3", "common"))
+      .select("doc_id").collect().map(_.getLong(0)).sorted
+    assert(got.toSeq == (300L until 400L))
+  }
+
+  test("token search: absent term reads zero rows; present terms never miss") {
+    val p = tokenFixture()
+    assert(ManifestTable.readVersionSearch(
+      spark, p, 1L, "text", Seq("zzzabsent")).count() == 0L)
+    // no-false-negative sweep: every marker finds its full block
+    (0 until 8).foreach { b =>
+      assert(ManifestTable.readVersionSearch(
+        spark, p, 1L, "text", Seq(s"marker$b")).count() == 100L,
+        s"marker$b block was falsely pruned")
+    }
+    // terms must be canonical lowercase tokens — anything else would
+    // silently hash to a vocabulary entry that cannot exist
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersionSearch(spark, p, 1L, "text", Seq("Marker3"))
+    }
+    intercept[IllegalArgumentException] {
+      ManifestTable.readVersionSearch(spark, p, 1L, "text", Seq())
+    }
+  }
+
+  // ---- metadata-only aggregation ----
+
+  test("statsAgg answers COUNT/MIN/MAX from the manifest with the data files DELETED") {
+    val p = freshPath()
+    ManifestTable.commit(
+      kv((1L to 400L).map(i => i -> (i * 3)): _*).repartition(8, col("k")), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k", "v"))
+    // agree with the honest scan first
+    val viaScan = ManifestTable.readVersion(spark, p, 1L)
+      .agg(count(lit(1)), min("k"), max("k")).head()
+    val viaStats = ManifestTable.statsAgg(spark, p, 1L, "k").head()
+    assert(viaStats.getLong(0) == viaScan.getLong(0))
+    assert(viaStats.getLong(1) == viaScan.getLong(1))
+    assert(viaStats.getLong(2) == viaScan.getLong(2))
+    // now destroy every data file; the per-file stats keep answering
+    ManifestTable.files(spark, p, 1L)
+      .foreach(n => fs(p).delete(new Path(s"$p/_pool/$n"), false))
+    val after = ManifestTable.statsAgg(spark, p, 1L, "v").head()
+    assert(after.getLong(0) == 400L)
+    assert(after.getLong(1) == 3L && after.getLong(2) == 1200L)
+    // a column without stats still fails loudly
+    intercept[IllegalArgumentException] {
+      ManifestTable.statsAgg(spark, p, 1L, "nope")
+    }
+  }
+
+  test("statsAgg NULL semantics: all rows counted, NULLs invisible to min/max") {
+    import spark.implicits._
+    val p = freshPath()
+    val rows = Seq[(Long, Option[Long])](
+      1L -> Some(10L), 2L -> None, 3L -> Some(30L), 4L -> None)
+      .toDF("k", "v")
+    // force one all-NULL file: partition by nullness
+    ManifestTable.commit(rows.repartition(2, col("v").isNull), p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("v"))
+    val got = ManifestTable.statsAgg(spark, p, 1L, "v").head()
+    assert(got.getLong(0) == 4L, "COUNT must include NULL rows")
+    assert(got.getLong(1) == 10L && got.getLong(2) == 30L)
   }
 }

@@ -37,4 +37,20 @@ class RecursionSpec extends AnyFunSuite {
         maxDepth = 10).count()
     }
   }
+
+  test("h5 refuses an anchor over its fixed-dims size contract, naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("h5_anchor").toString
+    Seq((0L, "R0")).toDF("r_regionkey", "r_name")
+      .write.parquet(s"$dir/region.parquet")
+    // 40 nations: ROOT + 1 region + 40 nations = 42 anchor rows > 31
+    (0L until 40L).map(i => (i, s"N$i", 0L))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+      .write.parquet(s"$dir/nation.parquet")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("h5_reporting_dim_sql")(spark, dir)
+    }
+    assert(e.getMessage.contains(
+      s"more than ${graft.queries.SqlQueries.H5AnchorLimit} rows") &&
+      e.getMessage.contains("fixed-dims contract"), e.getMessage)
+  }
 }

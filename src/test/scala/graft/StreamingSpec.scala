@@ -324,22 +324,45 @@ class StreamingSpec extends AnyFunSuite {
       // batch-side truth: groupBy over ALL rows (150+225=375 etc.)
       assert(got === Set((1L, 1L, 150L), (2L, 2L, 300L), (3L, 1L, 400L)),
         s"got $got")
-      // MVCC history: every micro-batch committed an immutable snapshot,
-      // and the intermediate version holds only batch-0 state
-      val v0 = spark.read.parquet(s"$dir/v0").collect()
+      // MVCC history: every micro-batch committed an immutable version
+      // carrying its batch id, and the intermediate one holds only
+      // batch-0 state
+      import graft.sources.ManifestTable
+      val v0 = ManifestTable.versionOfTxn(spark, dir, 0L)
+      assert(v0.isDefined && ManifestTable.versionOfTxn(spark, dir, 1L)
+        .contains(ManifestTable.latestVersion(spark, dir)))
+      val first = ManifestTable.readVersion(spark, dir, v0.get).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(v0 === Set((1L, 1L, 150L), (2L, 1L, 225L)), s"v0: $v0")
-      // Commit gating: a crash-interrupted write is a version directory
-      // WITHOUT _SUCCESS (or an unrenamed _staging_*); neither may ever
-      // become "latest" — the pre-fix listFiles picked the max v<k> by
-      // name and would have served the partial v99 here.
-      val partial = new java.io.File(dir, "v99"); partial.mkdirs()
+      assert(first === Set((1L, 1L, 150L), (2L, 1L, 225L)), s"v0: $first")
+      // Commit gating: a crash-interrupted commit is pool files and a
+      // temp manifest that were never renamed into place; neither may
+      // ever become "latest"
+      val pool = new java.io.File(dir, "_pool"); pool.mkdirs()
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "v99", "part-00000.parquet"), "torn")
-      val staging = new java.io.File(dir, "_staging_v98"); staging.mkdirs()
+        java.nio.file.Paths.get(dir, "_pool", "v99_part-00000.parquet"), "torn")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir, "_manifest_tmp_v99_1"),
+        "[\"v99_part-00000.parquet\"]")
       val still = EventStream.latestUserSummary(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(still === got, s"uncommitted v99/_staging must be invisible: $still")
+      assert(still === got, s"a torn commit must be invisible: $still")
+      val versions = ManifestTable.committedVersions(spark, dir).sorted
+      // a REPLAYED batch (fresh checkpoint, same batch id 0) finds its
+      // txn committed and publishes nothing
+      val mem2 = MemoryStream[(Long, Long, Long, String, Double)]
+      val q2 = EventStream.upsertUserSummary(
+          mem2.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
+          dir)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("upsert_ck2").toString)
+        .start()
+      try {
+        mem2.addData((1L, 1L, 1L, "click", 1.50), (2L, 2L, 2L, "click", 2.25))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      assert(ManifestTable.committedVersions(spark, dir).sorted === versions)
+      assert(EventStream.latestUserSummary(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet === got)
     } finally q.stop()
   }
 
@@ -1067,7 +1090,7 @@ class StreamingSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.lit(4L)))
     val empty = Seq.empty[(Long, Long, Long, Long)]
       .toDF("bucket", "n_users", "sum_events", "sum_cents")
-    val ref = graft.sources.VersionedTable.incrementalAgg(
+    val ref = graft.sources.ManifestTable.incrementalAgg(
       empty, feedDf, Seq("bucket"), "n_users",
       Seq("n_events" -> "sum_events", "total_cents" -> "sum_cents"))
       .collect()
