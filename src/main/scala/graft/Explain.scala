@@ -175,11 +175,17 @@ object Explain {
         |production scale the hourly aggregate is the thing to materialize
         |once, exactly like the memoized pair sets in TextQueries.""".stripMargin,
     "d13_editdist_pairs" ->
-      """Candidate generation is a shuffled equi-join on (lang, length
-        |bucket) — no CartesianProduct / BroadcastNestedLoopJoin; the
-        |Levenshtein DP runs codegen'd inside the join's output filter on
-        |120-char prefixes, so per-pair cost is bounded regardless of
-        |document length.""".stripMargin,
+      """Three stage-shape facts compose here. (1) Candidate generation is
+        |an equi-join on the (lang, length-bucket) block key with the dim
+        |side broadcast — no CartesianProduct / BroadcastNestedLoopJoin.
+        |(2) The edit-distance filter is the native `bedit` expression
+        |inside the join stage's codegen, on 120-char prefixes, so per-pair
+        |cost is bounded regardless of document length — not the builtin's
+        |per-codepoint walk. (3) The streamed side is explicitly
+        |repartitioned first: a compact corpus file scans as one partition,
+        |the broadcast join inherits it, and Catalyst would push the filter
+        |below any post-join repartition — so without the input spread, the
+        |whole O(pairs·len·k) stage ran on ONE core (96 s → 1.3 s total).""".stripMargin,
     "p9_heavy_hitters" ->
       """Misra-Gries: the sketch side is a two-phase ObjectHashAggregate —
         |partial MG buffers (≤64 counters) built map-side, ONE merged buffer
@@ -258,16 +264,6 @@ object Explain {
         |O(1) state. requiredChildDistribution/Ordering drive
         |EnsureRequirements to build this shape; no Window node, no
         |null-slot union schema anywhere in the plan.""".stripMargin,
-    "d13_editdist_pairs" ->
-      """Three stage-shape facts compose here. (1) The candidate join is an
-        |equi-join on the (lang, length-bucket) block key with the dim side
-        |broadcast. (2) The DP filter is the native banded `bedit`
-        |expression inside the join stage's codegen — not the builtin's
-        |per-codepoint walk. (3) The streamed side is explicitly
-        |repartitioned first: a compact corpus file scans as one partition,
-        |the broadcast join inherits it, and Catalyst would push the filter
-        |below any post-join repartition — so without the input spread, the
-        |whole O(pairs·len·k) stage ran on ONE core (96 s → 1.3 s total).""".stripMargin,
     "g3_triangle_count" ->
       """Triangle counting survives hubs because wedges are generated ONLY
         |at each edge's lower-(degree, id) endpoint: the plan is degree

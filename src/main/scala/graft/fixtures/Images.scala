@@ -90,18 +90,12 @@ object Images {
        |GROUP BY img_id, w, h ORDER BY doc_id""".stripMargin
   }
 
-  /** The fixture as a DIRECTORY of real .png FILES (m8's input): the
-    * shape a media corpus actually arrives in — files in an object
-    * store, identity in the file NAME, not a column. Written once per
-    * warehouse dir (idempotent on content: encoding is deterministic);
-    * a non-image `README.txt` is planted deliberately so the reader's
-    * `pathGlobFilter` has something real to exclude.
-    */
   /** The same spec'd images encoded as JPEG (TYPE_BYTE_GRAY → one
-    * component, 8-bit precision) — the m12 header-triage input. JPEG
-    * is lossy, so pixel values are NOT oracle material here; the SOF
-    * header facts (dimensions, precision, component count) are, and
-    * those are exact and encoder-independent.
+    * component, 8-bit precision) — the m12 input to
+    * `operators.HeaderTriage.jpeg`'s marker walk. JPEG is lossy, so
+    * pixel values are NOT oracle material here; the SOF header facts
+    * (dimensions, precision, component count) are, and those are exact
+    * and encoder-independent.
     */
   def encodeJpeg(w: Int, h: Int, seed: Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
@@ -132,6 +126,13 @@ object Images {
       .toDF()
   }
 
+  /** The fixture as a DIRECTORY of real .png FILES (m8's input): the
+    * shape a media corpus actually arrives in — files in an object
+    * store, identity in the file NAME, not a column. Written once per
+    * warehouse dir (idempotent on content: encoding is deterministic);
+    * a non-image `README.txt` is planted deliberately so the reader's
+    * `pathGlobFilter` has something real to exclude.
+    */
   def writePngDir(dir: String): String = {
     val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(root)

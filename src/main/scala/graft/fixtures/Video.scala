@@ -13,10 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * download-style mdat-before-moov). The variation is the point: a
   * parser that assumes fixed offsets instead of walking box lengths
   * gets every non-faststart file wrong. Encode lives here on the
-  * fixture side; the engine ships only the relational box walk
-  * (operators/Bmff) — they share nothing but the ISO 14496-12 layout,
-  * and the DuckDB oracle replays expectations from the generation
-  * params alone.
+  * fixture side; the engine ships only the box walk
+  * (operators/HeaderTriage) — they share nothing but the ISO 14496-12
+  * layout, and the DuckDB oracle replays expectations from the
+  * generation params alone.
   *
   * No video CODEC anywhere — by design. The container header carries
   * dimensions, timescale and duration; triage-before-decode is the

@@ -785,15 +785,14 @@ object TextQueries {
     // ---- m10: header-only media metadata scan (no decode) ----
     // The triage pass a media pipeline runs BEFORE spending decode
     // CPU: image dimensions read straight out of the container header
-    // bytes with relational expressions — PNG's fixed layout (8-byte
-    // signature, IHDR first: width/height as big-endian u32 at offsets
-    // 17/21, bit depth at 25, color type at 26) parsed via
-    // substring→hex→conv, all codegen'd, ZERO codec involvement. At
-    // 100 TB this is what partitions a heterogeneous media corpus by
-    // size/type without decoding a single frame; rows failing the
-    // signature check are surfaced, not crashed on. The oracle knows
-    // the generation parameters; the engine must recover them from
-    // raw container bytes — cross-checked against m4's full decode by
+    // bytes — PNG's fixed layout (8-byte signature, IHDR first: width/
+    // height as big-endian u32, then bit depth and color type) parsed
+    // by HeaderTriage.png, ZERO codec involvement. At 100 TB this is
+    // what partitions a heterogeneous media corpus by size/type
+    // without decoding a single frame; rows failing the signature
+    // check are surfaced, not crashed on. The oracle knows the
+    // generation parameters; the engine must recover them from raw
+    // container bytes — cross-checked against m4's full decode by
     // construction (same fixture).
     QueryDef("m10_png_header_scan", {
       val values = graft.fixtures.Images.specs
@@ -804,19 +803,11 @@ object TextQueries {
          |  CAST(8 AS BIGINT) AS bit_depth, CAST(0 AS BIGINT) AS color_type
          |FROM imgs ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.fixtures.Images.pngPayloads(s)
-        // container sniff: rows that aren't PNG fail loud here, they
-        // don't produce garbage dimensions
-        .where(expr("hex(substring(payload, 1, 8)) = '89504E470D0A1A0A'"))
-        .select(col("doc_id"),
-          expr("CAST(conv(hex(substring(payload, 17, 4)), 16, 10) AS BIGINT)")
-            .as("width"),
-          expr("CAST(conv(hex(substring(payload, 21, 4)), 16, 10) AS BIGINT)")
-            .as("height"),
-          expr("CAST(conv(hex(substring(payload, 25, 1)), 16, 10) AS BIGINT)")
-            .as("bit_depth"),
-          expr("CAST(conv(hex(substring(payload, 26, 1)), 16, 10) AS BIGINT)")
-            .as("color_type"))
+      // container sniff: rows that aren't PNG fail loud here, they
+      // don't produce garbage dimensions
+      graft.operators.HeaderTriage.png(graft.fixtures.Images.pngPayloads(s))
+        .where(col("is_png"))
+        .select("doc_id", "width", "height", "bit_depth", "color_type")
         .orderBy("doc_id")
     },
 
@@ -825,33 +816,22 @@ object TextQueries {
     // for the container family where fixed offsets DON'T work: MP4
     // metadata lives behind a box-length walk (moov before or after
     // an arbitrary-size mdat, free padding, udta siblings — the
-    // fixture exercises every layout). The walk is a bounded unrolled
-    // chain of substr/hex/conv expressions — codegen'd scan-stage
-    // math, zero shuffles, zero codec CPU: at 100 TB this is what
-    // routes a mixed media corpus to per-type decode pools and prunes
-    // sub-second clips without reading past the header bytes. The
-    // oracle replays expected facts from generation params alone;
-    // agreement proves the engine recovered them from raw container
-    // bytes. Non-BMFF payloads surface as is_bmff=false rows (spec'd
-    // in MultimodalSpec), never as garbage dimensions.
-    // Handle MEMOIZED per session (r18, the Tables.load prepared-
-    // statement shape): the Bmff walk's named-column unroll is ~40
-    // stacked Projects, and rebuilding + re-analyzing that plan cost
-    // 0.38 s of pure driver time per invocation (measured r18:
-    // wall 1.40 s, jobs 0.11 s, gap 1.29 s) — 92% of the query's wall
-    // was planning the same constant fixture plan again. The cache
-    // holds the LAZY analyzed frame only; every run still encodes the
-    // payloads on executors and walks the bytes (noop sink forces full
-    // execution — no rows, no results are retained).
+    // fixture exercises every layout). HeaderTriage.bmff walks the
+    // boxes in one typed UDF inside the scan stage — zero shuffles,
+    // zero codec CPU: at 100 TB this is what routes a mixed media
+    // corpus to per-type decode pools and prunes sub-second clips
+    // without reading past the header bytes. The oracle replays
+    // expected facts from generation params alone; agreement proves
+    // the engine recovered them from raw container bytes. Non-BMFF
+    // payloads surface as is_bmff=false rows (spec'd in
+    // MultimodalSpec), never as garbage dimensions.
     QueryDef("m11_mp4_header_scan", graft.fixtures.Video.oracleSql) {
       (s, dir) =>
-        graft.sources.SessionCache.getOrElseUpdate(s, "m11:q") {
-          graft.operators.Bmff.triage(graft.fixtures.Video.mp4Payloads(s))
-            .where(col("is_bmff"))
-            .select("doc_id", "brand", "width", "height", "timescale",
-              "duration", "duration_ms")
-            .orderBy("doc_id")
-        }
+        graft.operators.HeaderTriage.bmff(graft.fixtures.Video.mp4Payloads(s))
+          .where(col("is_bmff"))
+          .select("doc_id", "brand", "width", "height", "timescale",
+            "duration", "duration_ms")
+          .orderBy("doc_id")
     },
 
     // ---- m12: JPEG header triage (SOF marker walk) ----
@@ -859,8 +839,8 @@ object TextQueries {
     // offsets (m10), ISO-BMFF is a length-prefixed box walk (m11),
     // JPEG is a MARKER walk — variable-length FF-prefixed segments
     // whose count before SOFn differs by encoder, so dimensions are
-    // only reachable by segment-length arithmetic. Same named-column
-    // unroll, codegen'd scan-stage math, zero shuffles, zero decode.
+    // only reachable by segment-length arithmetic (HeaderTriage.jpeg:
+    // one UDF in the scan stage, zero shuffles, zero decode).
     // JPEG is lossy so only the exact header facts are oracle
     // material: SOF dimensions must equal the generation specs,
     // precision 8, one component (grayscale). Non-JPEG payloads
@@ -874,14 +854,10 @@ object TextQueries {
          |  CAST(1 AS BIGINT) AS components
          |FROM imgs ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      // same per-session handle memo as m11: the marker-walk unroll's
-      // plan is the cost at this row count, not the bytes
-      graft.sources.SessionCache.getOrElseUpdate(s, "m12:q") {
-        graft.operators.Jpeg.triage(graft.fixtures.Images.jpegPayloads(s))
-          .where(col("is_jpeg"))
-          .select("doc_id", "precision", "height", "width", "components")
-          .orderBy("doc_id")
-      }
+      graft.operators.HeaderTriage.jpeg(graft.fixtures.Images.jpegPayloads(s))
+        .where(col("is_jpeg"))
+        .select("doc_id", "precision", "height", "width", "components")
+        .orderBy("doc_id")
     },
 
     // ---- m13: REAL multi-frame decode through the video seam ----

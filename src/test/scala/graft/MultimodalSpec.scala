@@ -297,7 +297,7 @@ class MultimodalSpec extends AnyFunSuite {
     // the fixture varies box ORDER (moov-first vs mdat-first), free
     // padding, and udta siblings — a fixed-offset parser fails half
     // the specs; agreement across all of them proves the box walk
-    val out = graft.operators.Bmff.triage(
+    val out = graft.operators.HeaderTriage.bmff(
         graft.fixtures.Video.mp4Payloads(spark))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     for (sp <- graft.fixtures.Video.specs) {
@@ -324,7 +324,7 @@ class MultimodalSpec extends AnyFunSuite {
       (102L, Array.emptyByteArray),
       (103L, Array.fill(32)(0.toByte))) // right length, no ftyp
       .toDF("doc_id", "payload")
-    val out = graft.operators.Bmff.triage(junk).collect()
+    val out = graft.operators.HeaderTriage.bmff(junk).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out.size == 4) // every row surfaced
     for ((id, r) <- out) {
@@ -338,7 +338,7 @@ class MultimodalSpec extends AnyFunSuite {
     val truncated = Seq((104L,
       graft.fixtures.Video.encodeMp4(graft.fixtures.Video.specs.head)
         .take(24))).toDF("doc_id", "payload")
-    val t = graft.operators.Bmff.triage(truncated).collect().head
+    val t = graft.operators.HeaderTriage.bmff(truncated).collect().head
     assert(t.getAs[Boolean]("is_bmff"))
     assert(t.isNullAt(t.fieldIndex("width")))
   }
@@ -347,7 +347,7 @@ class MultimodalSpec extends AnyFunSuite {
     // javax.imageio's JFIF layout (APP0 + DQT(s) + SOF0 + ...) varies
     // in segment count; agreement across every spec including 1x1 and
     // 64x48 proves the marker WALK, not an offset guess
-    val out = graft.operators.Jpeg.triage(
+    val out = graft.operators.HeaderTriage.jpeg(
         graft.fixtures.Images.jpegPayloads(spark))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     for ((id, w, h, _) <- graft.fixtures.Images.specs) {
@@ -368,7 +368,7 @@ class MultimodalSpec extends AnyFunSuite {
         0xFF.toByte, 0xD9.toByte)), // no frame header
       (203L, "text".getBytes("UTF-8")))
       .toDF("doc_id", "payload")
-    val out = graft.operators.Jpeg.triage(junk).collect()
+    val out = graft.operators.HeaderTriage.jpeg(junk).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out.size == 4)
     assert(!out(200L).getAs[Boolean]("is_jpeg"))
@@ -405,7 +405,7 @@ class MultimodalSpec extends AnyFunSuite {
     }
     val padded = Seq((400L, pad(base, 1)), (401L, pad(base, 3)))
       .toDF("doc_id", "payload")
-    val out = graft.operators.Jpeg.triage(padded).collect()
+    val out = graft.operators.HeaderTriage.jpeg(padded).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     for ((id, r) <- out) {
       assert(r.getAs[Boolean]("is_jpeg"), s"doc $id lost signature")
@@ -467,12 +467,87 @@ class MultimodalSpec extends AnyFunSuite {
       (301L, ftyp ++ raw(1 << 30, "mdat", Array.fill[Byte](16)(0))), // past EOF
       (302L, ftyp ++ raw(16, "moov", Array.fill[Byte](64)(0)))) // truncating moov
       .toDF("doc_id", "payload")
-    val out = graft.operators.Bmff.triage(fuzz).collect()
+    val out = graft.operators.HeaderTriage.bmff(fuzz).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     for ((id, r) <- out) {
       assert(r.getAs[Boolean]("is_bmff"), s"doc $id should keep signature")
       assert(r.isNullAt(r.fieldIndex("width")), s"doc $id leaked width")
       assert(r.isNullAt(r.fieldIndex("duration_ms")), s"doc $id leaked duration")
     }
+  }
+
+  test("HeaderTriage: a field cut off by EOF reads NULL, never a shorter number") {
+    // a truncated field must not parse as the bytes that happen to exist
+    // (X'07' alone is 7; the full u16 X'0780' is 1920)
+    def cutAt(bytes: Array[Byte], marker: Array[Byte], rel: Int): Array[Byte] =
+      bytes.take(bytes.indexOfSlice(marker) + rel)
+    // MP4, moov last: cut one byte into tkhd's width (box start + 84)
+    val sp = graft.fixtures.Video.specs.find(s => s.moovLast && s.version == 0).get
+    val mp4 = cutAt(graft.fixtures.Video.encodeMp4(sp),
+      "tkhd".getBytes("US-ASCII"), -4 + 84 + 1)
+    val m = graft.operators.HeaderTriage.bmff(
+      Seq((600L, mp4)).toDF("doc_id", "payload")).collect().head
+    assert(m.getAs[Boolean]("is_bmff"))
+    assert(m.isNullAt(m.fieldIndex("width")), "cut tkhd width leaked")
+    assert(m.isNullAt(m.fieldIndex("height")))
+    // mvhd sits whole before the cut: its facts still read exactly
+    assert(m.getAs[Long]("timescale") == sp.timescale.toLong)
+    // JPEG: cut one byte into SOF0's height (marker + 5)
+    val jpg = cutAt(graft.fixtures.Images.encodeJpeg(31, 17, 5),
+      Array(0xFF, 0xC0).map(_.toByte), 5 + 1)
+    val j = graft.operators.HeaderTriage.jpeg(
+      Seq((601L, jpg)).toDF("doc_id", "payload")).collect().head
+    assert(j.getAs[Boolean]("is_jpeg"))
+    assert(j.isNullAt(j.fieldIndex("height")), "cut SOF height leaked")
+    assert(j.isNullAt(j.fieldIndex("width")))
+    // PNG: cut inside IHDR's width (bytes 16..19)
+    val png = graft.fixtures.Images.encodePng(1920, 2, 3).take(19)
+    val g = graft.operators.HeaderTriage.png(
+      Seq((602L, png)).toDF("doc_id", "payload")).collect().head
+    assert(g.getAs[Boolean]("is_png"))
+    assert(g.isNullAt(g.fieldIndex("width")), "cut IHDR width leaked")
+    assert(g.isNullAt(g.fieldIndex("height")))
+  }
+
+  test("HeaderTriage: walks run to the end of the parent, with no sibling bound") {
+    // 9 `free` boxes before moov and 17 COM segments before SOF: deeper
+    // than any fixed unroll of "real files have ~4 boxes" would reach
+    import java.nio.ByteBuffer
+    def free(n: Int): Array[Byte] = {
+      val bb = ByteBuffer.allocate(8 + n)
+      bb.putInt(8 + n); bb.put("free".getBytes("US-ASCII"))
+      bb.array()
+    }
+    val sp = graft.fixtures.Video.specs.head
+    val base = graft.fixtures.Video.encodeMp4(sp.copy(padLen = 0))
+    val ftypLen = ByteBuffer.wrap(base, 0, 4).getInt
+    val mp4 = base.take(ftypLen) ++ (1 to 9).flatMap(i => free(i)) ++
+      base.drop(ftypLen)
+    val m = graft.operators.HeaderTriage.bmff(
+      Seq((700L, mp4)).toDF("doc_id", "payload")).collect().head
+    assert(m.getAs[Long]("width") == sp.w.toLong)
+    assert(m.getAs[Long]("height") == sp.h.toLong)
+    assert(m.getAs[Long]("duration_ms") == 1000L * sp.duration / sp.timescale)
+    val com = Array(0xFF, 0xFE, 0x00, 0x04, 'h', 'i').map(_.toByte)
+    val jpg0 = graft.fixtures.Images.encodeJpeg(31, 17, 5)
+    val jpg = jpg0.take(2) ++ Array.fill(17)(com).flatten ++ jpg0.drop(2)
+    val j = graft.operators.HeaderTriage.jpeg(
+      Seq((701L, jpg)).toDF("doc_id", "payload")).collect().head
+    assert(j.getAs[Long]("width") == 31L)
+    assert(j.getAs[Long]("height") == 17L)
+  }
+
+  test("m11's plan is one triage projection, not a per-step unroll") {
+    val qe = SparkEntry.queries("m11_mp4_header_scan")(spark, "unused")
+      .queryExecution
+    val projects = qe.analyzed.collect {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project => p
+    }
+    assert(projects.size < 5, s"${projects.size} Projects:\n${qe.analyzed}")
+    // the is_bmff filter and the fact columns share one walk per row
+    val walks = qe.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+    })
+    assert(walks.size == 1, qe.optimizedPlan.toString)
   }
 }

@@ -15,6 +15,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/round_close.XXXXXX)"
+# Size Spark to this host, as ROADMAP's tier-1 command does: one local
+# core per CPU, and a driver heap of half the RAM clamped to 2..8 GiB
+# (forked test and run JVMs take -Xmx from SPARK_DRIVER_MEM; build.sbt
+# falls back to 32g without it).
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 
 echo "== 1/3 sbt test =="
 sbt -batch test >"$OUT_DIR/sbt_test.log" 2>&1 \
@@ -22,7 +28,7 @@ sbt -batch test >"$OUT_DIR/sbt_test.log" 2>&1 \
 grep -E "Tests: succeeded" "$OUT_DIR/sbt_test.log" | tail -1
 
 echo "== 2/3 Verify + DuckDB oracle ($SF_DIR) =="
-SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
+sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
   >"$OUT_DIR/verify.log" 2>&1 || { tail -20 "$OUT_DIR/verify.log"; echo "FAIL: Verify"; exit 1; }
 python3 tools/check_correctness.py "$SF_DIR" "$OUT_DIR/verify" | tail -3
 
